@@ -30,6 +30,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..session import in_callers_context
 from ..sources.scan import partition_key
 from ..table.catalog import Table
 from ..table.format import DataFile
@@ -316,7 +317,7 @@ def compact(
 
     if todo:
         with ThreadPoolExecutor(max_workers=len(bundles)) as pool:
-            list(pool.map(run_bundle, bundles))
+            list(pool.map(in_callers_context(spark, run_bundle), bundles))
 
     entries = log.entries()
     return {

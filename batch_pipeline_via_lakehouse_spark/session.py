@@ -7,12 +7,27 @@ same settings are what you would ship to a 1000-executor cluster:
 - Arrow on (every pandas UDF crosses the JVM/Python boundary in batches),
 - UTC session timezone (oracle comparisons against DuckDB are TZ-stable),
 - shuffle partitions sized to the parallelism level, not the 200 default.
+
+Python workers of ``local[...]`` masters start from the engine's daemon entry
+(``spark.python.daemon.module = batch_pipeline_via_lakehouse_spark.worker_daemon``,
+unless ``extra_conf`` names another). PySpark's worker calls
+``importlib.invalidate_caches()`` before every task, which on CPython < 3.12
+makes each zip importer re-read its archive's directory: 16 re-reads per task
+(``pyspark.zip`` and 12 of its subpackage importers, the spark-core jar twice,
+the py4j zip), about 210 ms of a task's worker set-up against 8-14 ms once
+they are skipped. The entry re-reads an archive only when its stat changed
+and then hands over to ``pyspark.daemon``; the forked workers inherit that.
+It is limited to local masters because the daemon must import the engine:
+here the package is already on the workers' ``PYTHONPATH``, while on a
+cluster it would have to be installed on every executor.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 
@@ -104,6 +119,27 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = {}
+    if master.startswith("local"):  # the daemon entry: see the module docstring
+        conf["spark.python.daemon.module"] = "batch_pipeline_via_lakehouse_spark.worker_daemon"
+    conf.update(extra_conf or {})
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def in_callers_context(spark: SparkSession, fn: Callable) -> Callable:
+    """Wrap a pool-thread target so its Spark jobs carry the calling thread's
+    local properties (job group, description, scheduler pool).
+
+    Capture happens here, in the caller's thread. Applying them through a
+    no-op keeps PySpark's wrapper off the stack when ``fn`` starts a job, so
+    stages stay named after the engine line that ran them rather than
+    ``wrapped at concurrent/futures/thread.py``."""
+    adopt = inheritable_thread_target(spark)(lambda: None)
+
+    def run(*args):
+        adopt()
+        return fn(*args)
+
+    return run

@@ -12,7 +12,9 @@ manifest -> parquet row-group -> page.
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 from dataclasses import dataclass
 
@@ -253,8 +255,10 @@ def scan_with_pruning(
     else:
         files = prune_files(table.live_files(snapshot_id), preds)
         df = table.read_files(spark, files)
-    for p in preds:
-        df = df.filter(p.to_column())
+    if preds:
+        # one conjunctive filter: one analysis round trip instead of one per
+        # predicate; CombineFilters yields the same plan and pushed filters
+        df = df.filter(functools.reduce(operator.and_, (p.to_column() for p in preds)))
     return df.select(*columns) if columns else df
 
 

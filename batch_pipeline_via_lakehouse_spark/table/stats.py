@@ -112,7 +112,11 @@ def collect_file_stats(
         return {p: _file_stats(p, tracked, sum_cols) for p in paths}
 
     pdf = pd.DataFrame({"path": paths})
-    df = spark.createDataFrame(pdf).repartition(min(len(paths), 64))
+    # one task per slot: a task spends ~1 ms per footer, so more tasks only
+    # add scheduling waves
+    df = spark.createDataFrame(pdf).repartition(
+        min(len(paths), spark.sparkContext.defaultParallelism)
+    )
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:

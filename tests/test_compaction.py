@@ -82,3 +82,26 @@ def test_compacted_file_layout_on_disk(spark, tmp_path):
     on_disk = set(glob.glob(os.path.join(t.data_dir, "**", "*.parquet"), recursive=True))
     # old files still on disk (pinned readers) but superset of live
     assert live <= on_disk and len(on_disk) > len(live)
+
+
+def test_compaction_jobs_carry_the_callers_job_group(spark, tmp_path):
+    t = _fragmented_table(spark, tmp_path)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("compact-under-group", "compaction under a caller's job group")
+    try:
+        report = compact(spark, t, target_bytes=8 * 1024 * 1024)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert report["files_out"] > 0
+    grouped = tracker.getJobIdsForGroup("compact-under-group")
+    stage_names = [
+        tracker.getStageInfo(s).name
+        for j in grouped
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    # the bundle threads' rewrite job is in the group; no engine job escaped it
+    assert any("compaction.py" in n for n in stage_names), stage_names
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped_before

@@ -89,6 +89,15 @@ def test_cluster_resume(spark, tmp_path):
     assert content_checksum(t.scan(spark)) == before
 
 
+def test_cluster_rejects_bad_bundle_waves(spark, tmp_path, monkeypatch):
+    t = Table.create(str(tmp_path / "t"), TOKEN_SCHEMA, partition_by=["source"])
+    t.append(token_table_df(spark, 200, seed=9), num_files=2)
+    for waves in ("0", "-1", "two"):
+        monkeypatch.setenv("SPARK_GRAFT_CLUSTER_BUNDLE_WAVES", waves)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CLUSTER_BUNDLE_WAVES"):
+            cluster(spark, t)
+
+
 def test_native_and_spark_cluster_impls_agree(spark, tmp_path):
     """The staged-exchange (native) and DataFrame-shuffle (spark) rewrites
     must preserve identical content; both must leave per-file key-sorted
