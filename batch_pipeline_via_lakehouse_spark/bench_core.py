@@ -1,15 +1,13 @@
-"""Shared bench harness: the compaction+Z-order maintenance job (the
-north-rule metric) and the headline query set."""
+"""Shared bench harness: the fragmented input table and the timed
+compaction+Z-order maintenance job (the north-rule metric)."""
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import time
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from .datagen import TOKEN_SCHEMA, token_table_df
 from .operators.clustering import cluster
@@ -88,82 +86,3 @@ def run_maintenance_on_existing(
         "sequences_per_s": round(2 * n_rows / maint, 1),
         "tokens_per_s": round(2 * total_tokens / maint, 1),
     }
-
-
-def run_maintenance_bench(
-    spark: SparkSession,
-    n_rows: int,
-    seed: int = 42,
-    fragment_files: int = 64,
-    target_bytes: int = 32 * 1024 * 1024,
-    keep_dir: str | None = None,
-    max_concurrency: int | None = None,
-    warmup: bool = True,
-    hilbert: bool = False,
-) -> dict:
-    """Generate a fragmented token table, run compaction then Z-order
-    clustering; return phase timings + throughput (sequences/s, tokens/s
-    over the maintenance phases, which is the BASELINE.json metric).
-
-    The table lives on tmpfs (/dev/shm) when available: the sandbox's virtio
-    disk has low, highly variable throughput that would make every phase
-    IO-ceiling-bound; on a real cluster aggregate disk bandwidth scales with
-    executor count, which tmpfs approximates for scaling measurements."""
-    base = os.environ.get(
-        "SPARK_GRAFT_BENCH_DIR", "/dev/shm" if os.path.isdir("/dev/shm") else None
-    )
-    root = keep_dir or tempfile.mkdtemp(prefix="bench-tok-", dir=base)
-
-    if warmup:
-        _warmup_pass(spark, root, n_rows, fragment_files, target_bytes)
-
-    table_dir = os.path.join(root, "tok")
-    t = Table.create(table_dir, TOKEN_SCHEMA, partition_by=["source"])
-
-    t0 = time.monotonic()
-    t.append_native(token_table_df(spark, n_rows, seed=seed), num_files=fragment_files)
-    t_ingest = time.monotonic() - t0
-
-    total_tokens = int(
-        t.scan(spark).agg(F.sum(F.col("n_tok").cast("long"))).collect()[0][0]
-    )
-    files_before = len(t.live_files())
-
-    t0 = time.monotonic()
-    compact(spark, t, target_bytes=target_bytes, max_concurrency=max_concurrency)
-    t_compact = time.monotonic() - t0
-
-    t0 = time.monotonic()
-    cluster(spark, t, mode="zorder", target_bytes=target_bytes, max_concurrency=max_concurrency)
-    t_cluster = time.monotonic() - t0
-
-    files_after = len(t.live_files())
-
-    # Hilbert parity run (same data volume, re-clustered from the zorder
-    # layout): timed separately so the headline maintenance_s metric stays
-    # comparable across rounds while both curve modes carry a number.
-    t_hilbert = None
-    if hilbert:
-        t0 = time.monotonic()
-        cluster(spark, t, mode="hilbert", target_bytes=target_bytes)
-        t_hilbert = time.monotonic() - t0
-
-    maint = t_compact + t_cluster
-    out = {
-        "rows": n_rows,
-        "tokens": total_tokens,
-        "files_before": files_before,
-        "files_after": files_after,
-        "ingest_s": round(t_ingest, 2),
-        "compact_s": round(t_compact, 2),
-        "cluster_s": round(t_cluster, 2),
-        "maintenance_s": round(maint, 2),
-        "sequences_per_s": round(2 * n_rows / maint, 1),  # each row passes compact+cluster
-        "tokens_per_s": round(2 * total_tokens / maint, 1),
-    }
-    if t_hilbert is not None:
-        out["hilbert_s"] = round(t_hilbert, 2)
-        out["hilbert_tokens_per_s"] = round(total_tokens / t_hilbert, 1)
-    if keep_dir is None:
-        shutil.rmtree(root, ignore_errors=True)
-    return out

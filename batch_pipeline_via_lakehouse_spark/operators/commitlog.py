@@ -11,6 +11,10 @@ A killed job re-runs with the same ``job_id`` and skips partitions already
 logged — resume without duplicate work (north_rule). Lineage is the
 input-files -> output-files mapping; metrics give per-partition rows/bytes/
 tokens-per-second for skew diagnosis.
+
+Every maintenance rewrite shares one skeleton around it: pack resume units
+into byte-balanced bundles (``balanced_bundles``), rewrite a bundle in one
+Spark job, then gate, commit and log it (``commit_bundle``).
 """
 
 from __future__ import annotations
@@ -94,3 +98,62 @@ class CommitLog:
             f.write(json.dumps(rec) + "\n")
             f.flush()
             os.fsync(f.fileno())
+
+
+def balanced_bundles(units: list, n_bundles: int) -> list[list]:
+    """Greedy byte-balanced packing of ``(key, files)`` resume units into at
+    most ``n_bundles`` bundles: largest unit first (stable on ties), each
+    into the currently lightest bundle; empty bundles are dropped."""
+    bundles: list[list] = [[] for _ in range(n_bundles)]
+    loads = [0] * n_bundles
+    for key, files in sorted(units, key=lambda u: sum(f.bytes for f in u[1]), reverse=True):
+        i = loads.index(min(loads))
+        bundles[i].append((key, files))
+        loads[i] += sum(f.bytes for f in files)
+    return [b for b in bundles if b]
+
+
+def commit_bundle(
+    spark, table, log: CommitLog, lock, operation: str, summary: dict,
+    units: list, outputs: list, seconds: float,
+) -> list[dict]:
+    """Gate, commit and log one rewritten bundle; returns its report rows.
+
+    ``units`` are the bundle's ``(key, input files)`` and ``outputs`` the
+    files written for each unit, aligned. A unit whose output rows differ
+    from its manifest input rows (an input file changed on disk, staging
+    lost mid-run) aborts the bundle before commit, so its inputs stay live.
+    Otherwise one snapshot replaces every input, and each unit gets its
+    commit-log line (the resume checkpoint)."""
+    for (key, in_f), out_f in zip(units, outputs):
+        in_rows, out_rows = sum(f.rows for f in in_f), sum(f.rows for f in out_f)
+        if in_rows != out_rows:
+            raise RuntimeError(
+                f"{operation}[{log.job_id}] aborting commit of {key}: "
+                f"input rows {in_rows} != output rows {out_rows}"
+            )
+    has_tokens = "n_tok" in table.schema.fieldNames()
+    reports = []
+    with lock:  # the snapshot chain is single-writer
+        sid = table.commit(
+            [f for out_f in outputs for f in out_f],
+            {f.path for _, in_f in units for f in in_f},
+            operation,
+            summary,
+            spark=spark,
+        )
+        for (key, in_f), out_f in zip(units, outputs):
+            log.record(
+                partition=key,
+                input_files=[f.path for f in in_f],
+                output_files=[f.path for f in out_f],
+                snapshot_id=sid,
+                rows=sum(f.rows for f in out_f),
+                bytes_=sum(f.bytes for f in out_f),
+                tokens=sum(int(f.stat("n_tok", "sum") or 0) for f in out_f) if has_tokens else 0,
+                seconds=round(seconds / len(units), 3),
+            )
+            reports.append(
+                {"unit": key, "in_files": len(in_f), "out_files": len(out_f), "snapshot": sid}
+            )
+    return reports

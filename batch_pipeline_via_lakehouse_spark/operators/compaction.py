@@ -6,21 +6,22 @@ them; this operator fills that gap (SURVEY.md §4.1 last row).
 
 Plan: per identity-partition, take live files smaller than
 ``small_threshold`` (default 3/4 of target) and first-fit-decreasing them
-into bins of ~``target_bytes``. Execute: per partition, read the binned
-files, ``coalesce`` to the planned output count (narrow — compaction never
-needs a shuffle), rewrite, and commit a replace-snapshot. Scan output is
-byte-identical to pre-compaction (token-array equality invariant); readers
-pinned to older snapshots keep seeing the old files until expiry GC.
+into bins of ~``target_bytes``. Execute: pack bins into byte-balanced
+bundles; a bundle is one Spark job whose task i reads bin i's files with
+pyarrow and writes them as one file (no shuffle — rows never change bins),
+then one gated replace-snapshot commit. Scan output is byte-identical to
+pre-compaction (token-array equality invariant); readers pinned to older
+snapshots keep seeing the old files until expiry GC.
 
 Scale notes:
-- partition-level parallelism via a thread pool of concurrent Spark jobs
-  (the scheduler interleaves their tasks across executors);
-- per-partition commit log -> kill/resume without duplicate work;
+- bin-level parallelism: one task per bin, bundles run as concurrent jobs;
+- per-bin commit log -> kill/resume without duplicate work;
 - planning is metadata-only (manifest stats), never a data scan.
 """
 
 from __future__ import annotations
 
+import os
 import threading
 import time
 import uuid
@@ -32,9 +33,10 @@ from pyspark.sql import functions as F
 
 from ..session import in_callers_context
 from ..sources.scan import partition_key
+from ..table.arrow_io import META_SCHEMA, data_file, write_data_file
 from ..table.catalog import Table
 from ..table.format import DataFile
-from .commitlog import CommitLog
+from .commitlog import CommitLog, balanced_bundles, commit_bundle
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
@@ -142,7 +144,6 @@ def compact(
     small_threshold: float = 0.75,
     min_files_per_bin: int = 2,
     job_id: str | None = None,
-    max_concurrency: int | None = None,
     fail_after_partitions: int | None = None,  # test hook: simulate a kill
 ) -> dict:
     """Run compaction; returns a report. Re-run with the same ``job_id`` to
@@ -171,49 +172,20 @@ def compact(
     if fail_after_partitions is not None:
         todo = todo[:fail_after_partitions]
 
-    has_tokens = "n_tok" in table.schema.fieldNames()
-    commit_mutex = threading.Lock()
-    if max_concurrency is None:
-        # a rewrite group is one single-task write (coalesce) — saturating the
-        # cluster means one in-flight group per core, like Iceberg's
-        # max-concurrent-file-group-rewrites
-        max_concurrency = max(4, spark.sparkContext.defaultParallelism)
-
     # --- bundle groups into few wide jobs ----------------------------------
     # One Spark job per file group pays fixed job latency + driver py4j work
     # per group; with dozens of groups that fixed-cost pool caps scaling.
     # Instead: pack groups into <= n_bundles byte-balanced bundles; a bundle
-    # is ONE job — a union of per-group coalesce(1) branches, so each task
-    # rewrites exactly one group into exactly one output file (task index i
-    # <-> group i, recovered from the part-NNNNN file name for lineage).
-    # Split into multiple bundles (finer resume + commit granularity) only
-    # when each still holds >= 8 task waves; below that the extra commits +
-    # collects cost more than the granularity is worth.
+    # is ONE job in which task i rewrites group i into exactly one output
+    # file. Split into multiple bundles (finer resume + commit granularity,
+    # up to one per 4 cores) only when each still holds >= 8 task waves;
+    # below that the extra commits + collects cost more than the granularity
+    # is worth.
     par = max(1, spark.sparkContext.defaultParallelism)
-    n_bundles = max(1, min(max(1, max_concurrency // 4), len(todo) // (8 * par)))
-    bundles: list[list[tuple[str, list[DataFile]]]] = [[] for _ in range(n_bundles)]
-    bundle_bytes = [0] * n_bundles
-    for gk, files in todo:
-        i = bundle_bytes.index(min(bundle_bytes))
-        bundles[i].append((gk, files))
-        bundle_bytes[i] += sum(f.bytes for f in files)
-    bundles = [b for b in bundles if b]
-
+    bundles = balanced_bundles(todo, max(1, min(max(1, par // 4), len(todo) // (8 * par))))
+    commit_mutex = threading.Lock()
     results = []
-
-    import json as _json
-    import os
-    import uuid as _uuid
-    from urllib.parse import quote
-
-    tracked = [
-        f.name for f in table.schema.fields
-        if f.dataType.typeName() not in ("array", "map", "struct")
-    ]
-    sum_cols = [
-        f.name for f in table.schema.fields
-        if f.dataType.typeName() in ("integer", "long", "float", "double")
-    ]
+    table_root, tracked, sums = table.root, table.tracked_cols, table.sum_cols
 
     def run_bundle(bundle: list[tuple[str, list[DataFile]]]) -> None:
         t0 = time.monotonic()
@@ -221,24 +193,15 @@ def compact(
         # (read small files -> one zstd parquet at its final path) and emits
         # its manifest entry as data. No shuffle — rows never change bins —
         # and no JVM data path: byte-exact columnar copy at libzstd speed.
-        table_root = table.root
-        commit_rel = os.path.join("data", _uuid.uuid4().hex)
-        os.makedirs(os.path.join(table_root, commit_rel), exist_ok=True)
-        bin_descs = []
-        for gk, files in bundle:
-            partition = files[0].partition  # bins are partition-pure
-            dirs = "/".join(f"_p_{c}={quote(str(v), safe='')}" for c, v in sorted(partition.items()))
-            bin_descs.append(
-                {
-                    "paths": [os.path.join(table_root, f.path) for f in files],
-                    "partition": partition,
-                    "rel_dir": os.path.join(commit_rel, dirs) if dirs else commit_rel,
-                }
-            )
+        commit_rel = os.path.join("data", uuid.uuid4().hex)
+        bin_descs = [
+            # bins are partition-pure
+            ([os.path.join(table_root, f.path) for f in files], files[0].partition)
+            for _, files in bundle
+        ]
 
         def rewrite(batches):
             import pyarrow as pa
-            import pyarrow.compute as pc
             import pyarrow.parquet as pq
 
             # one OS thread per task: pyarrow's default pool is sized by
@@ -247,73 +210,23 @@ def compact(
             pa.set_cpu_count(1)
             for batch in batches:
                 for v in batch.column(0).to_pylist():
-                    d = bin_descs[v]
-                    tbl = pq.read_table(d["paths"], use_threads=False)
-                    os.makedirs(os.path.join(table_root, d["rel_dir"]), exist_ok=True)
-                    rel = os.path.join(d["rel_dir"], f"part-{v:05d}.zstd.parquet")
-                    abs_p = os.path.join(table_root, rel)
-                    pq.write_table(tbl, abs_p, compression="zstd")
-                    stats = {}
-                    for c in tracked:
-                        if c not in tbl.column_names:
-                            continue
-                        col = tbl.column(c)
-                        try:
-                            mm = pc.min_max(col).as_py()
-                        except pa.ArrowNotImplementedError:
-                            continue
-                        stats[c] = {"min": mm["min"], "max": mm["max"], "nulls": col.null_count}
-                        if c in sum_cols:
-                            stats[c]["sum"] = pc.sum(col).as_py()
-                    yield pa.RecordBatch.from_pydict(
-                        {
-                            "idx": pa.array([v], pa.int64()),
-                            "path": [rel],
-                            "rows": pa.array([tbl.num_rows], pa.int64()),
-                            "bytes": pa.array([os.path.getsize(abs_p)], pa.int64()),
-                            "stats": [_json.dumps(stats, default=str)],
-                        }
+                    paths, partition = bin_descs[v]
+                    tbl = pq.read_table(paths, use_threads=False)
+                    entry = write_data_file(
+                        tbl, table_root, commit_rel, partition,
+                        f"part-{v:05d}.zstd.parquet", tracked, sums,
                     )
+                    yield pa.RecordBatch.from_pylist([{"idx": v, **entry}])
 
         desc = spark.range(0, len(bin_descs), numPartitions=len(bin_descs))
-        meta = desc.mapInArrow(
-            rewrite, schema="idx long, path string, rows long, bytes long, stats string"
-        ).collect()
-        by_idx = {
-            r["idx"]: DataFile(
-                path=r["path"],
-                partition=bin_descs[r["idx"]]["partition"],
-                rows=r["rows"],
-                bytes=r["bytes"],
-                stats=_json.loads(r["stats"]),
-            )
-            for r in meta
-        }
-        out_files = [by_idx[i] for i in sorted(by_idx)]
-        seconds = time.monotonic() - t0
-        with commit_mutex:  # snapshot chain is single-writer
-            sid = table.commit(
-                out_files,
-                {f.path for _, files in bundle for f in files},
-                "compact",
-                {"job_id": job_id, "groups": [gk for gk, _ in bundle]},
-                spark=spark,
-            )
-            for i, (gk, in_files) in enumerate(bundle):
-                out_f = [by_idx[i]] if i in by_idx else []
-                log.record(
-                    partition=gk,
-                    input_files=[f.path for f in in_files],
-                    output_files=[f.path for f in out_f],
-                    snapshot_id=sid,
-                    rows=sum(f.rows for f in out_f),
-                    bytes_=sum(f.bytes for f in out_f),
-                    tokens=sum(int(f.stat("n_tok", "sum") or 0) for f in out_f) if has_tokens else 0,
-                    seconds=round(seconds / len(bundle), 3),
-                )
-                results.append(
-                    {"group": gk, "in": len(in_files), "out": len(out_f), "snapshot": sid}
-                )
+        rows = desc.mapInArrow(rewrite, schema=f"idx long, {META_SCHEMA}").collect()
+        by_idx = {r["idx"]: data_file(r) for r in rows}
+        outputs = [[by_idx[i]] if i in by_idx else [] for i in range(len(bundle))]
+        results.extend(commit_bundle(
+            spark, table, log, commit_mutex, "compact",
+            {"job_id": job_id, "groups": [gk for gk, _ in bundle]},
+            bundle, outputs, time.monotonic() - t0,
+        ))
 
     if todo:
         with ThreadPoolExecutor(max_workers=len(bundles)) as pool:

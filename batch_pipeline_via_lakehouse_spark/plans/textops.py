@@ -636,12 +636,15 @@ def _cc_min_label_kernel(a, b):
 def _cc_uf_task(batches):
     """mapInArrow body: concatenate the (single coalesced) partition's edge
     batches and emit one (v, lbl) batch from the NumPy kernel. Endpoints
-    must be non-null integers (LSH pair output always is)."""
+    must be non-null integers (LSH pair output always is); a null endpoint
+    raises instead of becoming an arbitrary int64 vertex id."""
     import numpy as np
     import pyarrow as pa
 
     aa, bb = [], []
     for batch in batches:
+        if batch.column(0).null_count or batch.column(1).null_count:
+            raise ValueError("connected_components: edge endpoints must be non-null")
         aa.append(batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64, copy=False))
         bb.append(batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64, copy=False))
     if not aa:
@@ -817,14 +820,8 @@ def connected_components(
         .agg(F.min("b").alias("_mn"))
         .select("v", F.least(F.col("v"), F.col("_mn")).alias("lbl"))
     )
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    _dbg = _os.environ.get("SPARK_GRAFT_CC_DEBUG") == "1"
     try:
         for it in range(max_iters):
-            _t0 = _time.monotonic()
             own = labels.select("v", "lbl", F.lit(True).alias("_own"))
             msgs = (
                 edges_sym.alias("e")
@@ -908,11 +905,6 @@ def connected_components(
             prev_rdd = new_rdd
             changed = obs.get["changed"] or 0
             labels = new_labels.select("v", "lbl")
-            if _dbg:
-                print(
-                    f"# cc round {it}: {_time.monotonic() - _t0:.2f}s changed={changed}",
-                    file=_sys.stderr,
-                )
             if changed == 0:
                 break
         else:

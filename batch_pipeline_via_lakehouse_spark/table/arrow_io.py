@@ -15,12 +15,23 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Iterator
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame
 
 from .format import DataFile
 
-_META_SCHEMA = "path string, partition string, rows long, bytes long, stats string"
+_P = "_p_"  # shadow partition-column prefix in directory layout
+
+# manifest entry of one written file, as the collected rows of a write job
+META_SCHEMA = "path string, partition string, rows long, bytes long, stats string"
+
+
+def partition_dir(commit_dir: str, partition: dict) -> str:
+    """``<commit_dir>/_p_<col>=<quoted value>/...``: the directory of a data
+    file, one level per identity-partition column in column-name order."""
+    dirs = [f"{_P}{c}={quote(str(v), safe='')}" for c, v in sorted(partition.items())]
+    return os.path.join(commit_dir, *dirs)
 
 
 def _arrow_stats(tbl, tracked: list[str], sum_cols: list[str]) -> dict:
@@ -51,6 +62,40 @@ def _arrow_stats(tbl, tracked: list[str], sum_cols: list[str]) -> dict:
     return stats
 
 
+def write_data_file(
+    tbl, table_root: str, commit_dir: str, partition: dict, name: str,
+    tracked: list[str], sum_cols: list[str],
+) -> dict:
+    """Executor side: write ``tbl`` as one zstd parquet file (level 1, the
+    parquet-cpp default: rewrite outputs are re-rewritten by later
+    maintenance, so compression CPU is a steady-state cost) under its
+    partition directory; returns its manifest entry as a ``META_SCHEMA`` row."""
+    import pyarrow.parquet as pq
+
+    rel = os.path.join(partition_dir(commit_dir, partition), name)
+    abs_path = os.path.join(table_root, rel)
+    os.makedirs(os.path.dirname(abs_path), exist_ok=True)
+    pq.write_table(tbl, abs_path, compression="zstd", compression_level=1)
+    return {
+        "path": rel,
+        "partition": json.dumps(partition, sort_keys=True),
+        "rows": tbl.num_rows,
+        "bytes": os.path.getsize(abs_path),
+        "stats": json.dumps(_arrow_stats(tbl, tracked, sum_cols), default=str),
+    }
+
+
+def data_file(row) -> DataFile:
+    """The DataFile of one collected ``META_SCHEMA`` row."""
+    return DataFile(
+        path=row["path"],
+        partition=json.loads(row["partition"]),
+        rows=row["rows"],
+        bytes=row["bytes"],
+        stats=json.loads(row["stats"]),
+    )
+
+
 def arrow_rewrite_job(
     df: DataFrame,
     table_root: str,
@@ -58,30 +103,14 @@ def arrow_rewrite_job(
     partition_cols: list[str],
     tracked: list[str],
     sum_cols: list[str],
-    zstd_level: int = 1,  # parquet-cpp's zstd default; rewrites are steady-state CPU
-    sort_by: list[str] | None = None,
-    drop_cols: list[str] | None = None,
-    split_extra_cols: list[str] | None = None,
 ) -> list[DataFile]:
     """Write ``df`` (already partitioned the way the caller wants) as one
     native-parquet file per (task, identity-partition value); returns
-    manifest entries. The whole rewrite is ONE Spark job.
-
-    ``sort_by`` sorts each task's table Arrow-side before writing — cheaper
-    than a JVM sortWithinPartitions for maintenance rewrites because the data
-    is leaving for Python anyway and the JVM sort's unsafe buffers are what
-    drive GC pressure at high task counts. ``drop_cols`` removes transient
-    key columns after the sort. ``split_extra_cols`` additionally split the
-    task's output into one file per value group (e.g. precomputed range-cell
-    ids) without appearing in the partition path or the output schema."""
-    from urllib.parse import quote
-
-    split_cols = [*partition_cols, *(split_extra_cols or [])]
+    manifest entries. The whole rewrite is ONE Spark job."""
 
     def task(batches: Iterator) -> Iterator:
         import numpy as np
         import pyarrow as pa
-        import pyarrow.parquet as pq
         from pyspark import TaskContext
 
         # one OS thread per task (pyarrow pools default to hardware
@@ -92,12 +121,10 @@ def arrow_rewrite_job(
         if not batch_list:
             return
         tbl = pa.Table.from_batches(batch_list)
-        if sort_by:
-            tbl = tbl.sort_by([(c, "ascending") for c in sort_by])
 
-        if split_cols:
-            keys = tbl.select(split_cols).to_pandas()
-            groups = keys.groupby(split_cols, sort=True, dropna=False).indices
+        if partition_cols:
+            keys = tbl.select(partition_cols).to_pandas()
+            groups = keys.groupby(partition_cols, sort=True, dropna=False).indices
             parts = []
             for pv, idx in groups.items():
                 pv_tuple = pv if isinstance(pv, tuple) else (pv,)
@@ -105,50 +132,13 @@ def arrow_rewrite_job(
         else:
             parts = [((), tbl)]
 
-        out = []
-        for seq, (pv_tuple, sub) in enumerate(parts):
-            if drop_cols:
-                sub = sub.drop_columns(drop_cols)
-            if split_extra_cols:
-                sub = sub.drop_columns([c for c in split_extra_cols if c in sub.column_names])
-            partition = dict(
-                zip(partition_cols, [str(v) for v in pv_tuple[: len(partition_cols)]])
+        yield pa.RecordBatch.from_pylist([
+            write_data_file(
+                sub, table_root, commit_dir,
+                dict(zip(partition_cols, [str(v) for v in pv_tuple])),
+                f"part-{tid:05d}-{seq:03d}.zstd.parquet", tracked, sum_cols,
             )
-            dirs = "/".join(f"_p_{c}={quote(str(v), safe='')}" for c, v in partition.items())
-            rel_dir = os.path.join(commit_dir, dirs) if dirs else commit_dir
-            os.makedirs(os.path.join(table_root, rel_dir), exist_ok=True)
-            rel_path = os.path.join(rel_dir, f"part-{tid:05d}-{seq:03d}.zstd.parquet")
-            abs_path = os.path.join(table_root, rel_path)
-            pq.write_table(
-                sub, abs_path, compression="zstd", compression_level=zstd_level
-            )
-            out.append(
-                (
-                    rel_path,
-                    json.dumps(partition, sort_keys=True),
-                    sub.num_rows,
-                    os.path.getsize(abs_path),
-                    json.dumps(_arrow_stats(sub, tracked, sum_cols), default=str),
-                )
-            )
-        yield pa.RecordBatch.from_pydict(
-            {
-                "path": [o[0] for o in out],
-                "partition": [o[1] for o in out],
-                "rows": pa.array([o[2] for o in out], pa.int64()),
-                "bytes": pa.array([o[3] for o in out], pa.int64()),
-                "stats": [o[4] for o in out],
-            }
-        )
+            for seq, (pv_tuple, sub) in enumerate(parts)
+        ])
 
-    rows = df.mapInArrow(task, schema=_META_SCHEMA).collect()
-    return [
-        DataFile(
-            path=r["path"],
-            partition=json.loads(r["partition"]),
-            rows=r["rows"],
-            bytes=r["bytes"],
-            stats=json.loads(r["stats"]),
-        )
-        for r in rows
-    ]
+    return [data_file(r) for r in df.mapInArrow(task, schema=META_SCHEMA).collect()]

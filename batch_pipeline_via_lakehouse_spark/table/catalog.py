@@ -34,9 +34,8 @@ from .format import (
     read_manifest,
     write_manifest,
 )
+from .arrow_io import _P, arrow_rewrite_job
 from .stats import collect_file_stats
-
-_P = "_p_"  # shadow partition-column prefix in directory layout
 
 
 def _norm_nullability(dt):
@@ -86,6 +85,22 @@ class Table:
         self.partition_cols: list[str] = meta["partition_by"]
         self.table_uuid: str = meta["uuid"]
         self._manifest_cache: dict[str, list[DataFile]] = {}
+
+    @property
+    def tracked_cols(self) -> list[str]:
+        """Columns whose per-file min/max/nulls the manifests record."""
+        return [
+            f.name for f in self.schema.fields
+            if f.dataType.typeName() not in ("array", "map", "struct")
+        ]
+
+    @property
+    def sum_cols(self) -> list[str]:
+        """Numeric columns whose per-file sum the manifests record."""
+        return [
+            f.name for f in self.schema.fields
+            if f.dataType.typeName() in ("integer", "long", "float", "double")
+        ]
 
     # ---------------------------------------------------------------- create
     @staticmethod
@@ -321,15 +336,7 @@ class Table:
         writer.parquet(commit_dir)
 
         paths = sorted(glob.glob(os.path.join(commit_dir, "**", "*.parquet"), recursive=True))
-        tracked = [
-            f.name for f in self.schema.fields if f.dataType.typeName() not in ("array", "map", "struct")
-        ]
-        sum_cols = [
-            f.name
-            for f in self.schema.fields
-            if f.dataType.typeName() in ("integer", "long", "float", "double")
-        ]
-        stats = collect_file_stats(spark, paths, tracked, sum_cols)
+        stats = collect_file_stats(spark, paths, self.tracked_cols, self.sum_cols)
         files: list[DataFile] = []
         for p in paths:
             rel = os.path.relpath(p, self.root)
@@ -350,22 +357,12 @@ class Table:
         """Append via executor-side native parquet writes (table/arrow_io):
         tasks write their own zstd files and return manifest entries — no JVM
         writer, no post-hoc stats pass. Same commit semantics as append()."""
-        from .arrow_io import arrow_rewrite_job
-
         out = conform_schema(df, self.schema)
         if num_files:
             out = out.repartition(num_files)
-        tracked = [
-            f.name for f in self.schema.fields
-            if f.dataType.typeName() not in ("array", "map", "struct")
-        ]
-        sums = [
-            f.name for f in self.schema.fields
-            if f.dataType.typeName() in ("integer", "long", "float", "double")
-        ]
         files = arrow_rewrite_job(
             out, self.root, os.path.join("data", uuid.uuid4().hex),
-            self.partition_cols, tracked, sums,
+            self.partition_cols, self.tracked_cols, self.sum_cols,
         )
         return self.commit(files, set(), "append")
 

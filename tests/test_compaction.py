@@ -3,6 +3,8 @@
 import glob
 import os
 
+import pytest
+
 from batch_pipeline_via_lakehouse_spark.datagen import TOKEN_SCHEMA, token_table_df
 from batch_pipeline_via_lakehouse_spark.functions.checksums import content_checksum
 from batch_pipeline_via_lakehouse_spark.operators.compaction import compact, plan_compaction
@@ -105,3 +107,66 @@ def test_compaction_jobs_carry_the_callers_job_group(spark, tmp_path):
     # the bundle threads' rewrite job is in the group; no engine job escaped it
     assert any("compaction.py" in n for n in stage_names), stage_names
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped_before
+
+
+def test_timestamp_stats_survive_compaction(spark, tmp_path):
+    """Compaction writes min/max with the same isoformat encoding as every
+    other writer, so a pruned timestamp scan finds the same rows after it."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, StructField, StructType, TimestampType
+
+    from batch_pipeline_via_lakehouse_spark.sources.scan import Pred, prune_files
+
+    schema = StructType([StructField("id", LongType()), StructField("ts", TimestampType())])
+    t = Table.create(str(tmp_path / "ts"), schema)
+    t0 = 1704067200  # 2024-01-01 00:00:00 UTC
+    for k in range(3):
+        t.append_native(
+            spark.range(100 * k, 100 * (k + 1)).select(
+                "id", F.timestamp_seconds(F.lit(t0) + F.col("id") * 60).alias("ts")
+            ),
+            num_files=1,
+        )
+    pred = Pred("ts", ">=", "2024-01-01T04:00:00")
+
+    def pruned_ids():
+        files = prune_files(t.live_files(), [pred])
+        rows = t.read_files(spark, files).filter(pred.to_column()).collect()
+        return sorted(r["id"] for r in rows)
+
+    inputs = t.live_files()
+    before = pruned_ids()
+    assert len(before) == 60
+
+    compact(spark, t)
+    (out,) = t.live_files()
+    lo, hi = min(f.stat("ts", "min") for f in inputs), max(f.stat("ts", "max") for f in inputs)
+    assert (lo, hi) == ("2024-01-01T00:00:00+00:00", "2024-01-01T04:59:00+00:00")
+    assert (out.stat("ts", "min"), out.stat("ts", "max")) == (lo, hi)
+    assert pruned_ids() == before
+
+
+def test_row_count_gate_blocks_both_rewrites(spark, tmp_path):
+    """A live file that lost rows on disk (its manifest entry unchanged)
+    aborts compaction and clustering before either commits."""
+    import pyarrow.parquet as pq
+
+    from batch_pipeline_via_lakehouse_spark.operators.clustering import cluster
+
+    # unpartitioned, so each operator rewrites the table as ONE bundle: a
+    # single commit, which the gate must stop
+    t = Table.create(str(tmp_path / "flat"), TOKEN_SCHEMA)
+    for k in range(4):
+        t.append(token_table_df(spark, 500, seed=100 + k), num_files=4)
+    victim = next(iter(plan_compaction(t, target_bytes=8 * 1024 * 1024).bins.values()))[0][0]
+    path = os.path.join(t.root, victim.path)
+    full = pq.read_table(path)
+    pq.write_table(full.slice(0, full.num_rows // 2), path)
+    sid = t.current_snapshot_id()
+
+    with pytest.raises(RuntimeError, match="aborting commit"):
+        compact(spark, t, target_bytes=8 * 1024 * 1024)
+    assert t.current_snapshot_id() == sid
+    with pytest.raises(RuntimeError, match="aborting commit"):
+        cluster(spark, t, target_bytes=2 * 1024 * 1024)
+    assert t.current_snapshot_id() == sid

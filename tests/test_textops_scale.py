@@ -230,6 +230,21 @@ def test_cc_min_label_kernel_min_semantics():
     assert list(lbl) == [1] * 9 + [20, 20]
 
 
+def test_cc_small_path_rejects_null_endpoints():
+    """The single-task union-find (no Spark) must refuse a null endpoint
+    rather than cast it to an arbitrary int64 vertex id."""
+    import pyarrow as pa
+    import pytest
+
+    from batch_pipeline_via_lakehouse_spark.plans.textops import _cc_uf_task
+
+    batch = pa.RecordBatch.from_pydict(
+        {"a": pa.array([1, None], pa.int64()), "b": pa.array([2, 3], pa.int64())}
+    )
+    with pytest.raises(ValueError, match="non-null"):
+        list(_cc_uf_task(iter([batch])))
+
+
 def test_repetition_ratio_is_shuffle_free(spark):
     """The repetition gate is a per-document projection — no explode, no
     Exchange (same scale class as langid)."""

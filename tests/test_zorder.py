@@ -89,20 +89,11 @@ def test_cluster_resume(spark, tmp_path):
     assert content_checksum(t.scan(spark)) == before
 
 
-def test_cluster_rejects_bad_bundle_waves(spark, tmp_path, monkeypatch):
-    t = Table.create(str(tmp_path / "t"), TOKEN_SCHEMA, partition_by=["source"])
-    t.append(token_table_df(spark, 200, seed=9), num_files=2)
-    for waves in ("0", "-1", "two"):
-        monkeypatch.setenv("SPARK_GRAFT_CLUSTER_BUNDLE_WAVES", waves)
-        with pytest.raises(ValueError, match="SPARK_GRAFT_CLUSTER_BUNDLE_WAVES"):
-            cluster(spark, t)
-
-
-def test_native_and_spark_cluster_impls_agree(spark, tmp_path):
-    """The staged-exchange (native) and DataFrame-shuffle (spark) rewrites
-    must preserve identical content; both must leave per-file key-sorted
-    layouts. Parity is asserted on the POST-cluster state of each impl (the
-    pre-cluster checksums of identically-seeded tables are trivially equal)."""
+@pytest.mark.parametrize("mode", ["zorder", "hilbert"])
+def test_cluster_sorts_every_output_file_by_key(spark, tmp_path, mode):
+    """Clustering keeps the content and leaves every output file sorted by
+    its cluster key: FNV-1a hashes of the non-partition dims, bounds = the
+    global n_tok min/max, the same derivation cluster() uses."""
     import os
 
     import pyarrow.parquet as pq
@@ -112,51 +103,26 @@ def test_native_and_spark_cluster_impls_agree(spark, tmp_path):
         native_cluster_key,
     )
 
-    post = {}
-    tables = {}
-    for impl in ("native", "spark"):
-        t = Table.create(str(tmp_path / f"t-{impl}"), TOKEN_SCHEMA, partition_by=["source"])
-        t.append(token_table_df(spark, 1200, seed=77), num_files=4)
-        before = content_checksum(t.scan(spark))
-        cluster(spark, t, mode="zorder", target_bytes=2 * 1024 * 1024, impl=impl)
-        assert content_checksum(t.scan(spark)) == before
-        post[impl] = content_checksum(t.scan(spark))
-        tables[impl] = t
-    # cross-impl: identical post-cluster content, row totals, and partitions
-    assert post["native"] == post["spark"]
-    from batch_pipeline_via_lakehouse_spark.functions.zorder import cluster_key_column
+    t = Table.create(str(tmp_path / f"t-{mode}"), TOKEN_SCHEMA, partition_by=["source"])
+    t.append(token_table_df(spark, 1200, seed=77), num_files=4)
+    before = content_checksum(t.scan(spark))
+    cluster(spark, t, mode=mode, target_bytes=2 * 1024 * 1024)
+    assert content_checksum(t.scan(spark)) == before
 
-    for impl, t in tables.items():
-        files = t.live_files()
-        assert sum(f.rows for f in files) == 1200, impl
-        # every output file is internally sorted by that impl's cluster key
-        # (native keys dims with FNV-1a, spark with xxhash64 — different but
-        # equally valid curves); bounds = global n_tok min/max, the same
-        # derivation cluster() used
-        lo = min(f.stat("n_tok", "min") for f in files)
-        hi = max(f.stat("n_tok", "max") for f in files)
-        for f in files:
-            if impl == "native":
-                tbl = pq.read_table(os.path.join(t.root, f.path), columns=["n_tok", "doc_id"])
-                k = native_cluster_key(
-                    "zorder",
-                    tbl.column("n_tok").to_numpy(),
-                    [fnv1a64(tbl.column("doc_id"))],
-                    float(lo),
-                    float(hi),
-                )
-            else:
-                rows = (
-                    spark.read.parquet(os.path.join(t.root, f.path))
-                    .select(
-                        cluster_key_column(
-                            "zorder", "n_tok", ["doc_id"], float(lo), float(hi), impl="jvm"
-                        ).alias("k")
-                    )
-                    .collect()
-                )
-                k = np.array([r["k"] for r in rows], dtype=np.int64)
-            assert np.all(np.diff(k.astype(np.int64)) >= 0), (impl, f.path)
+    files = t.live_files()
+    assert sum(f.rows for f in files) == 1200
+    lo = min(f.stat("n_tok", "min") for f in files)
+    hi = max(f.stat("n_tok", "max") for f in files)
+    for f in files:
+        tbl = pq.read_table(os.path.join(t.root, f.path), columns=["n_tok", "doc_id"])
+        k = native_cluster_key(
+            mode,
+            tbl.column("n_tok").to_numpy(),
+            [fnv1a64(tbl.column("doc_id"))],
+            float(lo),
+            float(hi),
+        )
+        assert np.all(np.diff(k) >= 0), f.path
 
 
 def test_fnv1a64_deterministic_and_spread():
