@@ -60,37 +60,6 @@ _SAMPLE_PER_FILE = 512  # key samples per input file for the cell bounds
 _BUNDLE_WAVES = 4
 
 
-def _relaxed_type(t):
-    """Fully-nullable image of an Arrow type (recursing through list/struct/
-    map, normalizing list element field names): different writers mark the
-    same logical column nullable vs not-null (and name list elements
-    'element' vs 'item'), and the reduce's ``Table.from_batches`` requires
-    EXACTLY one schema — the old multi-file parquet read promoted these
-    silently. Nullability relaxation of identical storage is a zero-copy
-    cast."""
-    import pyarrow as pa
-
-    if pa.types.is_list(t):
-        return pa.list_(_relaxed_type(t.value_type))
-    if pa.types.is_large_list(t):
-        return pa.large_list(_relaxed_type(t.value_type))
-    if pa.types.is_struct(t):
-        return pa.struct(
-            [pa.field(f.name, _relaxed_type(f.type), nullable=True) for f in t]
-        )
-    if pa.types.is_map(t):
-        return pa.map_(_relaxed_type(t.key_type), _relaxed_type(t.item_type))
-    return t
-
-
-def _relaxed_schema(schema):
-    import pyarrow as pa
-
-    return pa.schema(
-        [pa.field(f.name, _relaxed_type(f.type), nullable=True) for f in schema]
-    )
-
-
 def cluster(
     spark: SparkSession,
     table: Table,
@@ -136,8 +105,8 @@ def cluster(
     done = log.completed_partitions()
     todo = [(pk, fl) for pk, fl in sorted(by_part.items()) if pk not in done]
 
-    table_root, tracked, sums = table.root, table.tracked_cols, table.sum_cols
-    schema_order = table.schema.fieldNames()
+    table_root, schema = table.root, table.arrow_schema
+    tracked, sums = table.tracked_cols, table.sum_cols
     run_dir = os.path.join(table_root, "_staging", job_id, uuid.uuid4().hex[:8])
 
     def make_key(tbl):
@@ -232,16 +201,6 @@ def cluster(
                 for v in batch.column(0).to_pylist():
                     pki = file_pk[v]
                     tbl = pq.read_table(abs_paths[v], use_threads=False)
-                    # normalize away physical shadow columns (_p_<col>) some
-                    # writers leave in data files: run batches must share ONE
-                    # schema for the reduce's from_batches concat, and the
-                    # final files only need the table schema
-                    keep = [c for c in schema_order if c in tbl.column_names]
-                    if tbl.column_names != keep:
-                        tbl = tbl.select(keep)
-                    ns = _relaxed_schema(tbl.schema)
-                    if tbl.schema != ns:
-                        tbl = tbl.cast(ns)
                     k = make_key(tbl)
                     order = np.argsort(k, kind="stable")
                     stbl = (
@@ -331,7 +290,7 @@ def cluster(
                             )
                             entry = write_data_file(
                                 tbl, table_root, commit_rel, partitions[pki],
-                                f"part-{pki:04d}-{c:05d}.zstd.parquet", tracked, sums,
+                                f"part-{pki:04d}-{c:05d}.zstd.parquet", schema, tracked, sums,
                             )
                             yield pa.RecordBatch.from_pylist([{"pki": pki, **entry}])
 

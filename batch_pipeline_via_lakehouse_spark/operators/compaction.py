@@ -185,7 +185,8 @@ def compact(
     bundles = balanced_bundles(todo, max(1, min(max(1, par // 4), len(todo) // (8 * par))))
     commit_mutex = threading.Lock()
     results = []
-    table_root, tracked, sums = table.root, table.tracked_cols, table.sum_cols
+    table_root, schema = table.root, table.arrow_schema
+    tracked, sums = table.tracked_cols, table.sum_cols
 
     def run_bundle(bundle: list[tuple[str, list[DataFile]]]) -> None:
         t0 = time.monotonic()
@@ -211,10 +212,12 @@ def compact(
             for batch in batches:
                 for v in batch.column(0).to_pylist():
                     paths, partition = bin_descs[v]
-                    tbl = pq.read_table(paths, use_threads=False)
+                    # partitioning=None: a multi-file read would otherwise add
+                    # a `_p_<col>` column parsed from the directory names
+                    tbl = pq.read_table(paths, use_threads=False, partitioning=None)
                     entry = write_data_file(
                         tbl, table_root, commit_rel, partition,
-                        f"part-{v:05d}.zstd.parquet", tracked, sums,
+                        f"part-{v:05d}.zstd.parquet", schema, tracked, sums,
                     )
                     yield pa.RecordBatch.from_pylist([{"idx": v, **entry}])
 

@@ -501,11 +501,7 @@ def maintenance_compact_zorder(spark, sf_dir) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="maint-")
     try:
         t = Table.create(os.path.join(tmp, "tok"), TOKEN_SCHEMA, partition_by=["source"])
-        # executor-side native writes: same committed rows/fragmentation as
-        # append() (the JVM writer path stays covered by the table suite),
-        # but no JVM dynamic-partition writer and no separate stats pass —
-        # measured 1.4 -> 0.55 s warm at sf0.1 for the ingest leg alone
-        t.append_native(tok, num_files=4)
+        t.append(tok, num_files=4)
         compact(spark, t, target_bytes=16 * 1024 * 1024)
         cluster(spark, t, mode="zorder", target_bytes=16 * 1024 * 1024)
         rollup = (

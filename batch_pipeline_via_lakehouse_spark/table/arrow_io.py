@@ -1,10 +1,11 @@
-"""Executor-side native Parquet writes for maintenance rewrites.
+"""Executor-side native Parquet writes: the engine's only data-file writer.
 
-Spark's parquet writer compresses through the JVM (aircompressor) and forces
-a driver-side glob + footer-stats pass afterwards. For maintenance rewrites
-we instead let each task write its own output file with pyarrow (native
-libzstd, ~2-5x faster compression) and emit its manifest entry as data —
-one job in, manifest entries out, nothing to re-discover.
+Every write -- append, overwrite, MERGE, the stream sink, compaction and
+clustering -- lets each task write its own output files with pyarrow (native
+libzstd) and emit their manifest entries as data: one job in, manifest
+entries out, no JVM writer and no footer pass to re-discover what was
+written. Every file is cast to the table's one Arrow schema, so files from
+different operators always concatenate.
 
 This is still the no-per-row-Python discipline: tasks move whole Arrow
 record batches; Python never touches individual rows.
@@ -12,6 +13,8 @@ record batches; Python never touches individual rows.
 
 from __future__ import annotations
 
+import datetime as _dt
+import decimal as _decimal
 import json
 import os
 from collections.abc import Iterator
@@ -21,23 +24,41 @@ from pyspark.sql import DataFrame
 
 from .format import DataFile
 
-_P = "_p_"  # shadow partition-column prefix in directory layout
+_P = "_p_"  # partition-column prefix in the directory layout
+# directory value of a null identity-partition value (Hive's spelling)
+_NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
 
 # manifest entry of one written file, as the collected rows of a write job
 META_SCHEMA = "path string, partition string, rows long, bytes long, stats string"
 
 
+def _jsonable(v):
+    """One JSON encoding for stats and partition values: isoformat
+    datetimes, utf-8 (else hex) bytes, float decimals."""
+    if isinstance(v, bytes):
+        try:
+            return v.decode("utf-8")
+        except UnicodeDecodeError:
+            return v.hex()
+    if isinstance(v, (_dt.datetime, _dt.date)):
+        return v.isoformat()
+    if isinstance(v, _decimal.Decimal):
+        return float(v)
+    return v
+
+
 def partition_dir(commit_dir: str, partition: dict) -> str:
     """``<commit_dir>/_p_<col>=<quoted value>/...``: the directory of a data
     file, one level per identity-partition column in column-name order."""
-    dirs = [f"{_P}{c}={quote(str(v), safe='')}" for c, v in sorted(partition.items())]
+    dirs = [
+        f"{_P}{c}={_NULL_DIR if v is None else quote(str(v), safe='')}"
+        for c, v in sorted(partition.items())
+    ]
     return os.path.join(commit_dir, *dirs)
 
 
 def _arrow_stats(tbl, tracked: list[str], sum_cols: list[str]) -> dict:
     import pyarrow.compute as pc
-
-    from .stats import _jsonable
 
     stats: dict[str, dict] = {}
     for name in tracked:
@@ -46,9 +67,9 @@ def _arrow_stats(tbl, tracked: list[str], sum_cols: list[str]) -> dict:
         col = tbl.column(name)
         try:
             mm = pc.min_max(col).as_py()
-            # normalize through the SAME serializer the footer-stats path
-            # uses (isoformat datetimes): manifests must never mix value
-            # encodings or string comparisons in Pred.may_match mis-order
+            # one serializer for every file (isoformat datetimes): manifests
+            # must never mix value encodings or string comparisons in
+            # Pred.may_match mis-order
             entry = {
                 "min": _jsonable(mm["min"]),
                 "max": _jsonable(mm["max"]),
@@ -64,14 +85,18 @@ def _arrow_stats(tbl, tracked: list[str], sum_cols: list[str]) -> dict:
 
 def write_data_file(
     tbl, table_root: str, commit_dir: str, partition: dict, name: str,
-    tracked: list[str], sum_cols: list[str],
+    schema, tracked: list[str], sum_cols: list[str],
 ) -> dict:
-    """Executor side: write ``tbl`` as one zstd parquet file (level 1, the
-    parquet-cpp default: rewrite outputs are re-rewritten by later
-    maintenance, so compression CPU is a steady-state cost) under its
-    partition directory; returns its manifest entry as a ``META_SCHEMA`` row."""
+    """Executor side: write ``tbl`` cast to the table's Arrow ``schema`` as
+    one zstd parquet file (level 1, the parquet-cpp default: rewrite outputs
+    are re-rewritten by later maintenance, so compression CPU is a
+    steady-state cost) under its partition directory; returns its manifest
+    entry as a ``META_SCHEMA`` row. The cast is zero-copy when only field
+    nullability or list-element names differ, and it drops schema metadata
+    such as the cell index of clustering's staged runs."""
     import pyarrow.parquet as pq
 
+    tbl = tbl.cast(schema)
     rel = os.path.join(partition_dir(commit_dir, partition), name)
     abs_path = os.path.join(table_root, rel)
     os.makedirs(os.path.dirname(abs_path), exist_ok=True)
@@ -101,12 +126,15 @@ def arrow_rewrite_job(
     table_root: str,
     commit_dir: str,
     partition_cols: list[str],
+    schema,
     tracked: list[str],
     sum_cols: list[str],
 ) -> list[DataFile]:
     """Write ``df`` (already partitioned the way the caller wants) as one
     native-parquet file per (task, identity-partition value); returns
-    manifest entries. The whole rewrite is ONE Spark job."""
+    manifest entries. The whole write is ONE Spark job. Partition values
+    are recorded as ``str(_jsonable(v))`` -- the stats encoding -- and a
+    null one as JSON null."""
 
     def task(batches: Iterator) -> Iterator:
         import numpy as np
@@ -123,22 +151,27 @@ def arrow_rewrite_job(
         tbl = pa.Table.from_batches(batch_list)
 
         if partition_cols:
-            keys = tbl.select(partition_cols).to_pandas()
-            groups = keys.groupby(partition_cols, sort=True, dropna=False).indices
-            parts = []
-            for pv, idx in groups.items():
-                pv_tuple = pv if isinstance(pv, tuple) else (pv,)
-                parts.append((pv_tuple, tbl.take(pa.array(np.sort(idx)))))
+            groups = (
+                tbl.select(partition_cols)
+                .append_column("_i", pa.array(np.arange(tbl.num_rows, dtype=np.int64)))
+                .group_by(partition_cols, use_threads=False)
+                .aggregate([("_i", "list")])
+            )
+            values = groups.select(partition_cols).to_pylist()
+            parts = [
+                ({c: None if v is None else str(_jsonable(v)) for c, v in pv.items()},
+                 tbl.take(idx.values))
+                for pv, idx in zip(values, groups.column("_i_list"))
+            ]
         else:
-            parts = [((), tbl)]
+            parts = [({}, tbl)]
 
         yield pa.RecordBatch.from_pylist([
             write_data_file(
-                sub, table_root, commit_dir,
-                dict(zip(partition_cols, [str(v) for v in pv_tuple])),
-                f"part-{tid:05d}-{seq:03d}.zstd.parquet", tracked, sum_cols,
+                sub, table_root, commit_dir, partition,
+                f"part-{tid:05d}-{seq:03d}.zstd.parquet", schema, tracked, sum_cols,
             )
-            for seq, (pv_tuple, sub) in enumerate(parts)
+            for seq, (partition, sub) in enumerate(parts)
         ])
 
     return [data_file(r) for r in df.mapInArrow(task, schema=META_SCHEMA).collect()]

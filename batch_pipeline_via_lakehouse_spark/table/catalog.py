@@ -7,11 +7,11 @@ queryable (time travel == ``scan(snapshot_id=...)``, the analogue of Iceberg's
 ``notebooks/iceberg_curd/create_iceberg_table.ipynb`` cells 6-11).
 
 Partitioning is identity-style like the reference's bronze tables
-(``src/elt/bronze/_bronze_handler.py:50-56`` partitions by ingest_year/month):
-we write with ``partitionBy`` on shadow ``_p_<col>`` copies so the partition
-value shapes the directory layout (and the manifest entry) while the real
-column stays inside the Parquet file — scans of explicit file lists then need
-no basePath reconstruction and schema stays uniform across commits.
+(``src/elt/bronze/_bronze_handler.py:50-56`` partitions by ingest_year/month).
+Every write goes through ``arrow_io.arrow_rewrite_job``: the partition value
+names the directory and the manifest entry while the real column stays inside
+the Parquet file, so scans of explicit file lists need no basePath
+reconstruction, and every file carries the one ``Table.arrow_schema``.
 """
 
 from __future__ import annotations
@@ -20,7 +20,6 @@ import glob
 import json
 import os
 import uuid
-from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,14 +33,13 @@ from .format import (
     read_manifest,
     write_manifest,
 )
-from .arrow_io import _P, arrow_rewrite_job
-from .stats import collect_file_stats
+from .arrow_io import arrow_rewrite_job
 
 
 def _norm_nullability(dt):
     """Type with all nullability flags erased (for cast-necessity checks —
     Spark refuses array<int> -> array<int> casts differing only in
-    containsNull)."""
+    containsNull — and for the one file schema, ``Table.arrow_schema``)."""
     from pyspark.sql.types import ArrayType, MapType
 
     if isinstance(dt, StructType):
@@ -93,6 +91,15 @@ class Table:
             f.name for f in self.schema.fields
             if f.dataType.typeName() not in ("array", "map", "struct")
         ]
+
+    @property
+    def arrow_schema(self):
+        """The Arrow schema of every data file: the table schema with all
+        nullability erased, so whatever a write's plan says about nulls, its
+        files concatenate with every other file of the table."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return to_arrow_schema(_norm_nullability(self.schema))
 
     @property
     def sum_cols(self) -> list[str]:
@@ -307,64 +314,25 @@ class Table:
         return [r["name"] for r in rows]
 
     # ------------------------------------------------------------- write
-    def write_datafiles(
-        self,
-        df: DataFrame,
-        num_files: int | None = None,
-        sort_within: list[str] | None = None,
-        use_coalesce: bool = False,
-    ) -> list[DataFile]:
+    def write_datafiles(self, df: DataFrame, num_files: int | None = None) -> list[DataFile]:
         """Write ``df`` as immutable Parquet under a fresh commit dir and
-        return manifest entries (stats collected footer-only, distributed).
-
-        ``use_coalesce`` merges input partitions narrowly (no shuffle) —
-        right for compaction, where input rows need no redistribution."""
-        spark = df.sparkSession
-        commit_dir = os.path.join(self.data_dir, uuid.uuid4().hex)
+        return its manifest entries: ONE Spark job in which each task writes
+        one file per identity-partition value it holds (``arrow_io``).
+        Without ``num_files`` the input partitioning, and its row order, is
+        kept."""
         out = conform_schema(df, self.schema)
         if num_files:
-            out = out.coalesce(num_files) if use_coalesce else out.repartition(num_files)
-        if sort_within:
-            out = out.sortWithinPartitions(*sort_within)
-        writer = out.write.mode("error")
-        if self.partition_cols:
-            shadow = {_P + c: F.col(c) for c in self.partition_cols}
-            out2 = out
-            for name, expr in shadow.items():
-                out2 = out2.withColumn(name, expr)
-            writer = out2.write.mode("error").partitionBy(*[_P + c for c in self.partition_cols])
-        writer.parquet(commit_dir)
-
-        paths = sorted(glob.glob(os.path.join(commit_dir, "**", "*.parquet"), recursive=True))
-        stats = collect_file_stats(spark, paths, self.tracked_cols, self.sum_cols)
-        files: list[DataFile] = []
-        for p in paths:
-            rel = os.path.relpath(p, self.root)
-            partition = {}
-            for seg in rel.split(os.sep):
-                if seg.startswith(_P) and "=" in seg:
-                    k, v = seg.split("=", 1)
-                    partition[k[len(_P):]] = unquote(v)
-            rows, nbytes, st = stats[p]
-            files.append(DataFile(path=rel, partition=partition, rows=rows, bytes=nbytes, stats=st))
-        return files
+            out = out.repartition(num_files)
+        return arrow_rewrite_job(
+            out, self.root, os.path.join("data", uuid.uuid4().hex),
+            self.partition_cols, self.arrow_schema, self.tracked_cols, self.sum_cols,
+        )
 
     def append(self, df: DataFrame, num_files: int | None = None) -> int:
         files = self.write_datafiles(df, num_files=num_files)
         return self.commit(files, set(), "append")
 
-    def append_native(self, df: DataFrame, num_files: int | None = None) -> int:
-        """Append via executor-side native parquet writes (table/arrow_io):
-        tasks write their own zstd files and return manifest entries — no JVM
-        writer, no post-hoc stats pass. Same commit semantics as append()."""
-        out = conform_schema(df, self.schema)
-        if num_files:
-            out = out.repartition(num_files)
-        files = arrow_rewrite_job(
-            out, self.root, os.path.join("data", uuid.uuid4().hex),
-            self.partition_cols, self.tracked_cols, self.sum_cols,
-        )
-        return self.commit(files, set(), "append")
+    append_native = append
 
     def overwrite(self, df: DataFrame, num_files: int | None = None) -> int:
         files = self.write_datafiles(df, num_files=num_files)

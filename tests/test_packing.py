@@ -201,7 +201,7 @@ def test_pack_table_windows_manifest_offsets(spark, tmp_path):
     df = spark.createDataFrame(
         _token_docs(200), "doc_id string, tokens array<int>, n_tok int, source string"
     ).repartitionByRange(4, "source", "doc_id")
-    t.commit(t.write_datafiles(df, sort_within=["doc_id"]), set(), "append")
+    t.commit(t.write_datafiles(df.sortWithinPartitions("doc_id")), set(), "append")
     assert len(t.live_files()) > 2  # the parity below spans multiple files
 
     fast = pack_table_windows(spark, t, ctx_len=16)
@@ -346,7 +346,7 @@ def test_pack_table_windows_null_mix_falls_back(spark, tmp_path):
         for i in range(40)
     ]
     df = spark.createDataFrame(docs, sch).coalesce(1)
-    t.commit(t.write_datafiles(df, sort_within=["doc_id"]), set(), "append")
+    t.commit(t.write_datafiles(df.sortWithinPartitions("doc_id")), set(), "append")
     fast = pack_table_windows(spark, t, ctx_len=16)
     plan = fast._jdf.queryExecution().executedPlan().toString()
     # null-count gate forced the generic offsets path (single-window form

@@ -5,8 +5,21 @@ Mirrors the reference's snapshot semantics exercise
 commits, snapshot listing, SELECT ... FOR VERSION AS OF).
 """
 
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
+
 from batch_pipeline_via_lakehouse_spark.datagen import TOKEN_SCHEMA, token_table_df
 from batch_pipeline_via_lakehouse_spark.functions.checksums import content_checksum
+from batch_pipeline_via_lakehouse_spark.operators.clustering import cluster
+from batch_pipeline_via_lakehouse_spark.sources.scan import Pred, partition_key, prune_files
 from batch_pipeline_via_lakehouse_spark.table import Table
 
 
@@ -76,15 +89,134 @@ def test_metadata_tables(spark, tmp_path):
     assert total == 150
 
 
-def test_append_native_equals_append(spark, tmp_path):
-    a = Table.create(str(tmp_path / "a"), TOKEN_SCHEMA, partition_by=["source"])
-    b = Table.create(str(tmp_path / "b"), TOKEN_SCHEMA, partition_by=["source"])
-    df = token_table_df(spark, 400, seed=21)
-    a.append(df, num_files=3)
-    b.append_native(df, num_files=3)
-    assert _tok_checksum(a.scan(spark)) == _tok_checksum(b.scan(spark))
-    fb = b.live_files()[0]
-    assert fb.partition.get("source") and fb.stat("n_tok", "sum") is not None
+def _ts_rows(spark, lo, hi):
+    """(doc_id, n_tok, source, ts) rows; ts walks 00:00 -> 15:56 UTC on
+    2024-01-01 every 300 ids, so each write holds early and late rows."""
+    ids = F.col("id")
+    return spark.range(lo, hi).select(
+        F.concat(F.lit("d"), ids.cast("string")).alias("doc_id"),
+        ((ids * 7) % 50).cast("int").alias("n_tok"),
+        F.element_at(F.array(F.lit("web"), F.lit("books"), F.lit("code")),
+                     (ids % 3 + 1).cast("int")).alias("source"),
+        F.timestamp_seconds(F.lit(1704067200) + (ids % 300) * 192).alias("ts"),
+    )
+
+
+def test_append_and_append_native_files_mix(spark, tmp_path):
+    """One table filled by append() and append_native(): timestamp stats
+    prune both writers' files, and cluster() (whose reduce concatenates
+    batches of every input file) succeeds with the content unchanged."""
+    import datetime as dt
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    sch = StructType([
+        StructField("doc_id", StringType()),
+        StructField("n_tok", IntegerType()),
+        StructField("source", StringType()),
+        StructField("ts", TimestampType()),
+    ])
+    t = Table.create(str(tmp_path / "t"), sch)
+    t.append(_ts_rows(spark, 0, 300).repartitionByRange(4, "ts"))
+    t.append_native(_ts_rows(spark, 300, 600).repartitionByRange(4, "ts"))
+    files = t.live_files()
+    assert len(files) == 8
+
+    cut = dt.datetime(2024, 1, 1, 8)
+
+    def true_max(f):
+        v = pc.max(pq.read_table(os.path.join(t.root, f.path), columns=["ts"])
+                   .column("ts")).as_py()
+        return v.replace(tzinfo=None)
+
+    early = {f.path for f in files if true_max(f) < cut}
+    kept = {f.path for f in prune_files(files, [Pred("ts", ">=", "2024-01-01T08:00:00")])}
+    assert early, "the range layout must leave some all-early files"
+    assert kept == {f.path for f in files} - early
+
+    before = content_checksum(t.scan(spark))
+    cluster(spark, t)
+    assert content_checksum(t.scan(spark)) == before
+    assert sum(f.rows for f in t.live_files()) == 600
+
+
+def test_partition_values_from_arrow(spark, tmp_path):
+    """Identity-partition values render like the stats (an int 3 is "3", not
+    pandas' "3.0"), equal values from different tasks share one partition
+    key, and a null value is JSON null under Hive's default directory (not
+    the string "nan", which would collide with a real "nan")."""
+    sch = StructType([StructField("k", LongType()), StructField("y", IntegerType())])
+    t = Table.create(str(tmp_path / "t"), sch, partition_by=["y"])
+    # task 0 holds y = 3, null, 3; task 1 holds y = 3, 3, 3
+    df = spark.range(0, 6, numPartitions=2).select(
+        F.col("id").alias("k"),
+        F.when(F.col("id") == 1, F.lit(None)).otherwise(F.lit(3)).cast("int").alias("y"),
+    )
+    t.append(df)
+    files = t.live_files()
+    threes = [f for f in files if f.partition == {"y": "3"}]
+    nulls = [f for f in files if f.partition == {"y": None}]
+    assert len(threes) == 2 and len({partition_key(f) for f in threes}) == 1
+    assert len(nulls) == 1 and len(files) == 3
+    assert "_p_y=__HIVE_DEFAULT_PARTITION__" in nulls[0].path
+    got = sorted((r["k"], r["y"]) for r in t.scan(spark).collect())
+    assert got == [(0, 3), (1, None), (2, 3), (3, 3), (4, 3), (5, 3)]
+
+
+def test_every_write_path_uses_the_table_arrow_schema(spark, tmp_path):
+    """append, overwrite, merge_scd1, merge_scd2, a stream micro-batch,
+    compact and cluster all write files whose schema IS the table's one
+    Arrow schema (no INT96 timestamp[ns], no per-writer nullability)."""
+    import datetime as dt
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from batch_pipeline_via_lakehouse_spark.operators.compaction import compact
+    from batch_pipeline_via_lakehouse_spark.operators.merge import merge_scd1, merge_scd2
+    from batch_pipeline_via_lakehouse_spark.streaming.sink import batch_writer
+
+    sch = StructType([
+        StructField("doc_id", StringType(), False),
+        StructField("n_tok", IntegerType(), False),
+        StructField("source", StringType()),
+        StructField("is_current", BooleanType()),
+        StructField("start_ts", TimestampType()),
+        StructField("end_ts", TimestampType()),
+    ])
+    t = Table.create(str(tmp_path / "t"), sch, partition_by=["source"])
+
+    def rows(lo, hi, bump=0):
+        return _ts_rows(spark, lo, hi).select(
+            "doc_id",
+            (F.col("n_tok") + bump).cast("int").alias("n_tok"),
+            "source",
+            F.lit(True).alias("is_current"),
+            F.col("ts").alias("start_ts"),
+            F.lit(None).cast("timestamp").alias("end_ts"),
+        )
+
+    t.append(rows(0, 40), num_files=2)
+    t.overwrite(rows(0, 60), num_files=3)
+    merge_scd1(spark, t, rows(50, 80, bump=1), key_cols=["doc_id"])
+    merge_scd2(
+        spark, t, rows(70, 90, bump=2).select("doc_id", "n_tok", "source"),
+        key_cols=["doc_id"], tracked_cols=["n_tok", "source"],
+        effective_ts=dt.datetime(2026, 1, 1),
+    )
+    batch_writer(t, "q-schema")(rows(100, 120), 0)
+    assert compact(spark, t)["files_out"] >= 1
+    cluster(spark, t)
+
+    want = t.arrow_schema
+    written = glob.glob(os.path.join(t.root, "data", "**", "*.parquet"), recursive=True)
+    assert len(written) > len(t.live_files())  # replaced files are checked too
+    for p in written:
+        got = pq.read_schema(p)
+        assert got.equals(want, check_metadata=False), (p, got, want)
 
 
 def test_distributed_commit_matches_driver_commit(spark, tmp_path):
