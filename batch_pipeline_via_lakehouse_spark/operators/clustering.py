@@ -49,7 +49,7 @@ from pyspark.sql import SparkSession
 
 from ..functions.zorder import fnv1a64, native_cluster_key
 from ..session import in_callers_context
-from ..sources.scan import live_files_slim, partition_key
+from ..sources.scan import partition_key
 from ..table.arrow_io import META_SCHEMA, data_file, write_data_file
 from ..table.catalog import Table
 from ..table.format import DataFile
@@ -80,10 +80,7 @@ def cluster(
     )
     base = meta["base_snapshot"]
 
-    # full-stats parse of every manifest row is the only O(#files) planning
-    # CPU here; above the plan threshold the listing strips stats to the two
-    # columns clustering needs (bounds dim + token metric) executor-side
-    files = live_files_slim(spark, table, base, stat_cols=(numeric_col, "n_tok"))
+    files = table.live_files(base)
     if not files:
         return {"job_id": job_id, "mode": mode, "partitions": 0, "tokens": 0,
                 "rows": 0, "seconds": 0.0, "executed": []}
@@ -307,7 +304,7 @@ def cluster(
         # missing (e.g. staging swept externally mid-run): commit_bundle's
         # rows-in == rows-out gate then aborts the bundle, inputs stay live
         reports.extend(commit_bundle(
-            spark, table, log, commit_mutex, "cluster",
+            table, log, commit_mutex, "cluster",
             {"partitions": [pk for pk, _ in bundle], "mode": mode},
             bundle, outputs, time.monotonic() - t0,
         ))

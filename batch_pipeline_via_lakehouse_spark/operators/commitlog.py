@@ -114,7 +114,7 @@ def balanced_bundles(units: list, n_bundles: int) -> list[list]:
 
 
 def commit_bundle(
-    spark, table, log: CommitLog, lock, operation: str, summary: dict,
+    table, log: CommitLog, lock, operation: str, summary: dict,
     units: list, outputs: list, seconds: float,
 ) -> list[dict]:
     """Gate, commit and log one rewritten bundle; returns its report rows.
@@ -140,7 +140,6 @@ def commit_bundle(
             {f.path for _, in_f in units for f in in_f},
             operation,
             summary,
-            spark=spark,
         )
         for (key, in_f), out_f in zip(units, outputs):
             log.record(

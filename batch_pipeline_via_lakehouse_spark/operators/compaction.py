@@ -29,7 +29,6 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from ..session import in_callers_context
 from ..sources.scan import partition_key
@@ -55,70 +54,25 @@ class CompactionPlan:
         return sum(len(bins) for bins in self.bins.values())
 
 
-def small_live_files(
-    table: Table,
-    threshold: int,
-    snapshot_id: int | None = None,
-    spark: SparkSession | None = None,
-    distributed: bool | None = None,
-) -> list[DataFile]:
-    """Live files under ``threshold`` bytes. Below DISTRIBUTED_PLAN_THRESHOLD
-    total files this is the driver manifest fold; above it (with a session)
-    the listing runs as a Spark job over the manifest Parquet with the byte
-    filter applied executor-side, so the driver materializes DataFile objects
-    (JSON stats parse included) only for the small files — on a steady-state
-    mostly-compacted table that is a tiny fraction of the snapshot."""
-    import json as _json
-
-    from ..sources.scan import DISTRIBUTED_PLAN_THRESHOLD, manifest_df, snapshot_file_count
-
-    if distributed is None:
-        distributed = (
-            spark is not None
-            and snapshot_file_count(table, snapshot_id) > DISTRIBUTED_PLAN_THRESHOLD
-        )
-    if not distributed:
-        return [f for f in table.live_files(snapshot_id) if f.bytes < threshold]
-    if spark is None:
-        raise ValueError("distributed small-file listing requires a SparkSession")
-    rows = (
-        manifest_df(spark, table, snapshot_id)
-        .filter(F.col("bytes") < threshold)
-        .collect()
-    )
-    return [
-        DataFile(
-            path=r.path,
-            partition=_json.loads(r.partition) if r.partition else {},
-            rows=r.rows,
-            bytes=r.bytes,
-            stats=_json.loads(r.stats) if r.stats else {},
-        )
-        for r in rows
-    ]
-
-
 def plan_compaction(
     table: Table,
     target_bytes: int = DEFAULT_TARGET_BYTES,
     small_threshold: float = 0.75,
     min_files_per_bin: int = 2,
     snapshot_id: int | None = None,
-    spark: SparkSession | None = None,
 ) -> CompactionPlan:
-    """First-fit-decreasing bin packing of undersized files, per partition.
-    With a session, the small-file listing auto-distributes above the plan
-    threshold (identical plans both ways — pytest-asserted)."""
+    """First-fit-decreasing bin packing of undersized files, per partition."""
     threshold = int(target_bytes * small_threshold)
     by_part: dict[str, list[DataFile]] = {}
-    for f in small_live_files(table, threshold, snapshot_id, spark=spark):
+    small = [f for f in table.live_files(snapshot_id) if f.bytes < threshold]
+    for f in small:
         by_part.setdefault(partition_key(f), []).append(f)
 
     plan = CompactionPlan()
     for pk, files in sorted(by_part.items()):
-        # FFD with a path tiebreak: bins must be identical no matter how the
-        # file list was produced (driver fold vs distributed listing differ
-        # in row order), or resume keys would not line up across paths
+        # FFD with a path tiebreak: bins must not depend on manifest order
+        # (a manifest rewrite reorders the listing), or a resumed job's group
+        # keys would not line up with the completed ones
         files.sort(key=lambda f: (-f.bytes, f.path))
         bins: list[list[DataFile]] = []
         sizes: list[int] = []
@@ -155,7 +109,7 @@ def compact(
     meta = log.init_job({"base_snapshot": table.current_snapshot_id(), "target_bytes": target_bytes})
     plan = plan_compaction(
         table, target_bytes, small_threshold, min_files_per_bin,
-        snapshot_id=meta["base_snapshot"], spark=spark,
+        snapshot_id=meta["base_snapshot"],
     )
     done = log.completed_partitions()
     # work unit = one file group (bin): finest resume granularity, and bins
@@ -226,7 +180,7 @@ def compact(
         by_idx = {r["idx"]: data_file(r) for r in rows}
         outputs = [[by_idx[i]] if i in by_idx else [] for i in range(len(bundle))]
         results.extend(commit_bundle(
-            spark, table, log, commit_mutex, "compact",
+            table, log, commit_mutex, "compact",
             {"job_id": job_id, "groups": [gk for gk, _ in bundle]},
             bundle, outputs, time.monotonic() - t0,
         ))

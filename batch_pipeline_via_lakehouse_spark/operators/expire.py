@@ -39,7 +39,8 @@ def expire_snapshots(
     concurrent in-flight writer's uncommitted files survive; pass 0 only when
     no writer is running. Stream batch ids recorded in expired snapshot
     summaries are folded into the persistent stream-state watermark first, so
-    the streaming sink's exactly-once dedup survives expiry."""
+    the streaming sink's exactly-once dedup survives expiry. ``spark`` is
+    ignored; it is accepted so existing callers keep working."""
     snaps = table.snapshots()
     current = table.current_snapshot_id()
     if not snaps:
@@ -79,7 +80,7 @@ def expire_snapshots(
         "swept_staging": 0,
     }
     if gc:
-        g = gc_orphans(table, grace_ms=gc_grace_ms, spark=spark)
+        g = gc_orphans(table, grace_ms=gc_grace_ms)
         report.update(
             deleted_files=g["deleted_files"],
             deleted_manifests=g["deleted_manifests"],
@@ -88,59 +89,35 @@ def expire_snapshots(
     return report
 
 
-def gc_orphans(
-    table: Table,
-    grace_ms: int = 24 * 3600 * 1000,
-    spark=None,
-    distributed: bool | None = None,
-) -> dict:
+def gc_orphans(table: Table, grace_ms: int = 24 * 3600 * 1000) -> dict:
     """Delete data files and manifests unreachable from any retained snapshot.
 
     ``grace_ms`` protects recently-written files (in-flight commits that have
-    not yet flipped VERSION). Set 0 only when no writer is running.
-
-    ``distributed=None`` auto-selects: with a session and more than
-    DISTRIBUTED_PLAN_THRESHOLD live files, both the reachability set and the
-    storage listing/delete run as Spark jobs (one task per commit dir) —
-    identical deletions to the driver fold, pytest-asserted. Below it the
-    driver fold wins (no job-launch latency)."""
-    if distributed is None:
-        from ..sources.scan import DISTRIBUTED_PLAN_THRESHOLD, snapshot_file_count
-
-        distributed = (
-            spark is not None
-            and snapshot_file_count(table) > DISTRIBUTED_PLAN_THRESHOLD
-        )
+    not yet flipped VERSION). Set 0 only when no writer is running."""
     cutoff = now_ms() - grace_ms
-    touched_dirs: set[str] = set()
-    if distributed:
-        if spark is None:
-            raise ValueError("distributed GC requires a SparkSession")
-        deleted_files, touched_dirs = _gc_data_distributed(spark, table, cutoff)
-        live_manifests = {m for s in table.snapshots() for m in s.manifests}
-    else:
-        live_data: set[str] = set()
-        live_manifests = set()
-        for s in table.snapshots():
-            live_manifests.update(s.manifests)
-            for f in table.live_files(s.snapshot_id):
-                live_data.add(f.path)
+    live_data: set[str] = set()
+    live_manifests: set[str] = set()
+    for s in table.snapshots():
+        live_manifests.update(s.manifests)
+        for f in table.live_files(s.snapshot_id):
+            live_data.add(f.path)
 
-        deleted_files = 0
-        # os.walk, not glob: glob skips dotfiles, which would leave orphaned
-        # Hadoop .crc sidecars behind forever. A sidecar lives iff its data
-        # file lives (_gc_guard_path), so live files keep their checksums.
-        for sub, _, names in os.walk(table.data_dir):
-            for n in names:
-                p = os.path.join(sub, n)
-                rel = os.path.relpath(p, table.root)
-                if _gc_guard_path(rel) in live_data:
-                    continue
-                if os.path.getmtime(p) * 1000 > cutoff:
-                    continue
-                os.remove(p)
-                touched_dirs.add(sub)
-                deleted_files += 1
+    deleted_files = 0
+    touched_dirs: set[str] = set()
+    # os.walk, not glob: glob skips dotfiles, which would leave orphaned
+    # Hadoop .crc sidecars behind forever. A sidecar lives iff its data
+    # file lives (_gc_guard_path), so live files keep their checksums.
+    for sub, _, names in os.walk(table.data_dir):
+        for n in names:
+            p = os.path.join(sub, n)
+            rel = os.path.relpath(p, table.root)
+            if _gc_guard_path(rel) in live_data:
+                continue
+            if os.path.getmtime(p) * 1000 > cutoff:
+                continue
+            os.remove(p)
+            touched_dirs.add(sub)
+            deleted_files += 1
 
     deleted_manifests = 0
     for p in glob.glob(os.path.join(table.metadata_dir, "manifest-*.parquet")):
@@ -152,10 +129,8 @@ def gc_orphans(
         deleted_manifests += 1
 
     # sweep commit dirs emptied by THIS GC's deletions only: bottom-up from
-    # each dir a delete touched, then its ancestors up to data_dir. Scoped
-    # to touched dirs so the sweep never lists the untouched bulk of the
-    # table (the former recursive full-tree glob was the last O(#files)
-    # driver listing on the distributed path).
+    # each dir a delete touched, then its ancestors up to data_dir, so a
+    # pre-existing empty dir elsewhere is left alone.
     for d in sorted(touched_dirs, key=len, reverse=True):
         p = os.path.normpath(d)
         data_root = os.path.normpath(table.data_dir)
@@ -208,81 +183,3 @@ def _gc_guard_path(rel: str) -> str:
         return os.path.join(d, name[1:-4])
     return rel
 
-
-def _gc_data_distributed(spark, table: Table, cutoff_ms: int) -> tuple[int, set[str]]:
-    """Spark-job orphan deletion: union-of-snapshots reachability as a
-    DataFrame (manifests are plain Parquet), a listing task per commit dir
-    (`data/<uuid>` — the natural storage-prefix shards), a left-anti join to
-    find orphans, and executor-side mtime-guarded deletes. The driver never
-    materializes the file list; it gets back only (count, dirs-touched) —
-    bounded by deleted-dir count, for the scoped empty-dir sweep.
-
-    Storage requirement: executor tasks address the table through plain
-    filesystem paths (os.walk/os.remove), so the table root must be a
-    SHARED filesystem visible to every executor — local mode, NFS, or a
-    FUSE-mounted object store. On a multi-host cluster without a shared
-    mount, swap these task bodies for the object store's list/delete API
-    (the sharding and join shape are storage-agnostic)."""
-    import pandas as pd
-
-    from ..sources.scan import manifest_df
-
-    live = None
-    for s in table.snapshots():
-        mdf = manifest_df(spark, table, s.snapshot_id).select("path")
-        live = mdf if live is None else live.union(mdf)
-    if live is None:
-        live = spark.createDataFrame([], "path string")
-    live = live.distinct()
-
-    root, data_dir = table.root, table.data_dir
-    # shards: one per commit dir, plus "" for files sitting directly in
-    # data_dir (a crashed writer can leave those too — the driver fold walks
-    # them, so the distributed path must as well)
-    commit_dirs = sorted(
-        d for d in os.listdir(data_dir) if os.path.isdir(os.path.join(data_dir, d))
-    ) + [""]
-
-    def list_task(pdfs):
-        for pdf in pdfs:
-            rows, guards = [], []
-            for d in pdf["dir"]:
-                if d == "":
-                    top = [e.name for e in os.scandir(data_dir) if e.is_file()]
-                    walk = [(data_dir, [], top)]
-                else:
-                    walk = os.walk(os.path.join(data_dir, d))
-                for sub, _, names in walk:
-                    for n in names:
-                        rel = os.path.relpath(os.path.join(sub, n), root)
-                        rows.append(rel)
-                        guards.append(_gc_guard_path(rel))
-            yield pd.DataFrame({"path": rows, "guard": guards})
-
-    n_tasks = min(len(commit_dirs), max(1, spark.sparkContext.defaultParallelism * 2))
-    found = (
-        spark.createDataFrame([(d,) for d in commit_dirs], "dir string")
-        .repartition(n_tasks)
-        .mapInPandas(list_task, "path string, guard string")
-    )
-    orphans = found.join(
-        live.withColumnRenamed("path", "guard"), "guard", "left_anti"
-    ).select("path")
-
-    def delete_task(pdfs):
-        from collections import Counter
-
-        cnt: Counter = Counter()
-        for pdf in pdfs:
-            for rel in pdf["path"]:
-                p = os.path.join(root, rel)
-                try:
-                    if os.path.getmtime(p) * 1000 <= cutoff_ms:
-                        os.remove(p)
-                        cnt[os.path.dirname(p)] += 1
-                except OSError:
-                    continue  # already gone (concurrent GC) — not an error
-        yield pd.DataFrame({"dir": list(cnt.keys()), "n": list(cnt.values())})
-
-    rows = orphans.mapInPandas(delete_task, "dir string, n long").collect()
-    return int(sum(r.n for r in rows)), {r.dir for r in rows}

@@ -11,12 +11,10 @@ contiguous subset. Data files are untouched; the commit is metadata-only.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession  # noqa: F401  (symmetry with other operators)
+import json
 
 from ..table.catalog import Table
-from ..table.format import Snapshot, atomic_write, now_ms, write_manifest
-import json
-import os
+from ..table.format import write_manifest
 
 
 def rewrite_manifests(table: Table, target_entries: int = 100_000) -> dict:
@@ -31,21 +29,16 @@ def rewrite_manifests(table: Table, target_entries: int = 100_000) -> dict:
     chunks = [files[i : i + target_entries] for i in range(0, len(files), target_entries)] or [[]]
     new_manifests = [write_manifest(table.metadata_dir, c) for c in chunks if c]
 
-    sid = parent + 1
-    snap = Snapshot(
-        snapshot_id=sid,
-        parent_id=parent,
-        operation="rewrite-manifests",
-        manifests=new_manifests,
-        summary={
+    sid = table.publish_snapshot(
+        parent,
+        "rewrite-manifests",
+        new_manifests,
+        {
             "manifests-before": len(parent_snap.manifests),
             "manifests-after": len(new_manifests),
             "data-files": len(files),
         },
-        timestamp_ms=now_ms(),
     )
-    atomic_write(os.path.join(table.metadata_dir, f"snap-{sid}.json"), snap.to_json())
-    atomic_write(os.path.join(table.metadata_dir, "VERSION"), str(sid))
     return {
         "snapshot": sid,
         "manifests_before": len(parent_snap.manifests),

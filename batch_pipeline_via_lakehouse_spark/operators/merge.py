@@ -107,62 +107,16 @@ def _affected_files(
     source: DataFrame,
     key_cols: list[str],
     snapshot_id: int,
-    distributed: bool | None = None,
 ) -> tuple[list, int]:
     """Find the live files holding matching keys -> (affected DataFiles,
     untouched-file count). Two stages: manifest min/max stats on the key
     columns rule files out metadata-only (never opened at all), then a
-    column-pruned key scan of the surviving candidates decides exactly.
-
-    Above DISTRIBUTED_PLAN_THRESHOLD live files, the stats prune runs as a
-    mapInPandas job over the manifest Parquet (the same pattern as
-    small_live_files / prune_paths_distributed), applying the IDENTICAL
-    Python predicate per manifest row executor-side — the driver then
-    materializes DataFile objects (JSON stats parse included) only for the
-    stats-surviving candidates, never the full snapshot. The candidate key
-    scan and commit need those candidate paths on the driver regardless, so
-    O(#candidates) is the floor; the former fold was O(#live)."""
-    from ..sources.scan import DISTRIBUTED_PLAN_THRESHOLD, manifest_df, snapshot_file_count
-
-    n_live = snapshot_file_count(table, snapshot_id)
+    column-pruned key scan of the surviving candidates decides exactly."""
+    live = table.live_files(snapshot_id)
+    n_live = len(live)
     if n_live == 0:
         return [], 0
-    if distributed is None:
-        distributed = n_live > DISTRIBUTED_PLAN_THRESHOLD
-    key_stats = _source_key_stats(source, key_cols)
-
-    if not distributed:
-        live = table.live_files(snapshot_id)
-        cand = _merge_candidates(live, key_stats)
-    else:
-        import json as _json
-
-        from ..table.format import DataFile
-
-        def prune(batches):
-            from ..sources.scan import _manifest_row_datafile
-
-            for b in batches:
-                keep = []
-                for i in range(len(b)):
-                    f = _manifest_row_datafile(
-                        b["path"].iat[i], b["partition"].iat[i], b["stats"].iat[i]
-                    )
-                    if _merge_candidates([f], key_stats):
-                        keep.append(i)
-                yield b.iloc[keep]
-
-        mdf = manifest_df(spark, table, snapshot_id)
-        cand = [
-            DataFile(
-                path=r["path"],
-                partition=_json.loads(r["partition"]) if r["partition"] else {},
-                rows=r["rows"],
-                bytes=r["bytes"],
-                stats=_json.loads(r["stats"]) if r["stats"] else {},
-            )
-            for r in mdf.mapInPandas(prune, mdf.schema).collect()
-        ]
+    cand = _merge_candidates(live, _source_key_stats(source, key_cols))
     if not cand:
         return [], n_live
     # planning must classify files with the SAME match semantics the rewrite
@@ -323,7 +277,6 @@ def _merge_scd1_body(
         "merge",
         {"job_id": job_id, "mode": "scd1", "affected-files": len(affected),
          "carried-files": n_untouched},
-        spark=spark,
     )
     log = CommitLog(table.root, job_id)
     log.record(
@@ -488,7 +441,6 @@ def _merge_scd2_body(
         {f.path for f in affected},
         "merge",
         {"job_id": job_id, "mode": "scd2", "affected-files": len(affected)},
-        spark=spark,
     )
     CommitLog(table.root, job_id).record(
         partition="merge",

@@ -167,151 +167,65 @@ class Table:
         return files
 
     # ------------------------------------------------------------- commit
-    # Above this many data files the driver-side manifest fold in commit()
-    # hands off to a Spark job (one task per manifest; untouched manifests
-    # are still reused by name, touched ones rewritten executor-side).
-    DISTRIBUTED_COMMIT_THRESHOLD = 200_000
-
     def commit(
         self,
         added: list[DataFile],
         removed_paths: set[str],
         operation: str,
         summary: dict | None = None,
-        spark: SparkSession | None = None,
-        distributed: bool | None = None,
     ) -> int:
         """Atomically produce the next snapshot: parent manifests minus
         ``removed_paths`` (affected manifests rewritten), plus one new
-        manifest for ``added``.
-
-        ``distributed=None`` auto-selects: when ``spark`` is provided and the
-        parent snapshot tracks more than DISTRIBUTED_COMMIT_THRESHOLD data
-        files, manifest filtering/rewriting runs as a Spark job over the
-        manifest list instead of a driver fold (same output — pytest-asserted
-        on cloned tables)."""
+        manifest for ``added``."""
         parent = self.current_snapshot_id()
         manifests: list[str] = []
         if parent is not None:
-            parent_manifests = self.snapshot(parent).manifests
-            if distributed is None:
-                distributed = bool(
-                    spark is not None
-                    and removed_paths
-                    and self._snapshot_file_count(parent) > self.DISTRIBUTED_COMMIT_THRESHOLD
-                )
-            if distributed:
-                if spark is None:
-                    raise ValueError("distributed commit requires a SparkSession")
-                manifests = self._filter_manifests_distributed(
-                    spark, parent_manifests, removed_paths
-                )
-            else:
-                for m in parent_manifests:
-                    # cached reads: a maintenance job issues one commit per
-                    # file group, and rescanning every manifest from disk per
-                    # commit would make commit cost quadratic in group count
-                    entries = self._read_manifest_cached(m)
-                    if removed_paths and any(e.path in removed_paths for e in entries):
-                        kept = [e for e in entries if e.path not in removed_paths]
-                        if kept:
-                            name = write_manifest(self.metadata_dir, kept)
-                            self._manifest_cache[name] = kept
-                            manifests.append(name)
-                    else:
-                        manifests.append(m)
+            for m in self.snapshot(parent).manifests:
+                # cached reads: a maintenance job issues one commit per
+                # file group, and rescanning every manifest from disk per
+                # commit would make commit cost quadratic in group count
+                entries = self._read_manifest_cached(m)
+                if removed_paths and any(e.path in removed_paths for e in entries):
+                    kept = [e for e in entries if e.path not in removed_paths]
+                    if kept:
+                        name = write_manifest(self.metadata_dir, kept)
+                        self._manifest_cache[name] = kept
+                        manifests.append(name)
+                else:
+                    manifests.append(m)
         if added:
             name = write_manifest(self.metadata_dir, added)
             self._manifest_cache[name] = added
             manifests.append(name)
+        return self.publish_snapshot(
+            parent,
+            operation,
+            manifests,
+            {
+                "added-files": len(added),
+                "removed-files": len(removed_paths),
+                "added-rows": sum(f.rows for f in added),
+                **(summary or {}),
+            },
+        )
 
+    def publish_snapshot(
+        self, parent: int | None, operation: str, manifests: list[str], summary: dict
+    ) -> int:
+        """Write snapshot ``parent + 1`` over ``manifests`` and flip VERSION
+        to it — the one place a snapshot becomes current."""
         sid = (parent or 0) + 1
         snap = Snapshot(
             snapshot_id=sid,
             parent_id=parent,
             operation=operation,
             manifests=manifests,
-            summary={
-                "added-files": len(added),
-                "removed-files": len(removed_paths),
-                "added-rows": sum(f.rows for f in added),
-                **(summary or {}),
-            },
+            summary=summary,
             timestamp_ms=now_ms(),
         )
         atomic_write(os.path.join(self.metadata_dir, f"snap-{sid}.json"), snap.to_json())
         atomic_write(os.path.join(self.metadata_dir, "VERSION"), str(sid))
         return sid
-
-    def _snapshot_file_count(self, snapshot_id: int) -> int:
-        """Data-file count, O(#manifests): cached manifests answer from
-        memory; only uncached ones cost a Parquet footer read. Keeps the
-        per-commit distributed?-decision free for maintenance jobs, whose
-        commit loop has every parent manifest cached already."""
-        import pyarrow.parquet as pq
-
-        total = 0
-        for m in self.snapshot(snapshot_id).manifests:
-            if m in self._manifest_cache:
-                total += len(self._manifest_cache[m])
-            else:
-                total += pq.read_metadata(os.path.join(self.metadata_dir, m)).num_rows
-        return total
-
-    def _filter_manifests_distributed(
-        self, spark: SparkSession, parent_manifests: list[str], removed_paths: set[str]
-    ) -> list[str]:
-        """Spark-job manifest filtering for commit: one task per manifest.
-        A manifest with no removed paths is reused by name (no IO beyond the
-        read); a touched one is rewritten executor-side minus the removed
-        entries. The removed set ships in the task closure — it is bounded by
-        the files one maintenance bundle rewrites, not by table size.
-
-        Storage requirement: tasks read/write the metadata dir via plain
-        filesystem paths, so it must be a SHARED filesystem visible to every
-        executor (local mode, NFS, FUSE-mounted object store). On a cluster
-        without a shared mount, swap the pyarrow read/write for the object
-        store API — the per-manifest sharding is storage-agnostic."""
-        if not removed_paths:
-            return list(parent_manifests)
-        meta_dir = self.metadata_dir
-        names = list(parent_manifests)
-        removed = sorted(removed_paths)
-
-        def task(batches):
-            import os as _os
-            import uuid as _uuid
-
-            import pyarrow as pa
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
-
-            rset = pa.array(removed, pa.string())
-            for b in batches:
-                for i in b.column(0).to_pylist():
-                    name = names[i]
-                    t = pq.read_table(_os.path.join(meta_dir, name))
-                    hit = pc.is_in(t.column("path"), value_set=rset)
-                    # pc.any over zero rows yields null -> `not` keeps the
-                    # manifest by name, exactly like the driver fold (which
-                    # reuses any untouched manifest, empty or not)
-                    if not pc.any(hit).as_py():
-                        yield pa.RecordBatch.from_pydict({"name": [name]})
-                        continue
-                    kept = t.filter(pc.invert(hit))
-                    if kept.num_rows == 0:
-                        continue
-                    new = f"manifest-{_uuid.uuid4().hex}.parquet"
-                    pq.write_table(kept, _os.path.join(meta_dir, new))
-                    yield pa.RecordBatch.from_pydict({"name": [new]})
-
-        n_tasks = max(1, min(len(names), spark.sparkContext.defaultParallelism * 4))
-        rows = (
-            spark.range(0, len(names), numPartitions=n_tasks)
-            .mapInArrow(task, "name string")
-            .collect()
-        )
-        return [r["name"] for r in rows]
 
     # ------------------------------------------------------------- write
     def write_datafiles(self, df: DataFrame, num_files: int | None = None) -> list[DataFile]:
@@ -341,12 +255,9 @@ class Table:
 
     # ------------------------------------------------------------- read
     def read_files(self, spark: SparkSession, files: list[DataFile]) -> DataFrame:
-        return self.read_paths(spark, [f.path for f in files])
-
-    def read_paths(self, spark: SparkSession, rel_paths: list[str]) -> DataFrame:
-        if not rel_paths:
+        if not files:
             return spark.createDataFrame([], self.schema)
-        paths = [os.path.join(self.root, p) for p in rel_paths]
+        paths = [os.path.join(self.root, f.path) for f in files]
         return spark.read.schema(self.schema).parquet(*paths)
 
     def scan(

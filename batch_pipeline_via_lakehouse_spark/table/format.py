@@ -22,10 +22,14 @@ the pointer once and then touch only immutable files -> snapshot isolation.
 Commits are write-temp + ``os.replace`` of VERSION (single-writer in the
 sandbox; the rename is the CAS point a real object-store catalog would use).
 
-Scale note: manifests are Parquet (1 row per data file). 100 TB at 256 MB
-files is ~400k manifest rows — trivially driver-readable via pyarrow; at
-larger file counts the same manifests are Spark-readable (they are plain
-Parquet), so every driver-side loop here has a distributed escape hatch.
+Scale note: manifests are Parquet (1 row per data file), and every planner
+(scan prune, MERGE candidates, compaction/cluster listing, commit, GC) is a
+driver-side fold over them. Measured at local[4] on TOKEN_SCHEMA manifests
+in 20 files: a cold full listing costs ~6.5 s at 200k files and ~21-24 s at
+1M; with the manifests cached a scan prune costs 0.5 s / 2.1 s and a commit's
+manifest filter 0.03 s / 0.15 s. About half of a cold ``read_manifest`` is
+JSON-parsing the ``stats`` strings, so the lever at 10^6 files is a typed
+stats encoding, not a second planner.
 """
 
 from __future__ import annotations

@@ -62,7 +62,7 @@ def main() -> None:
     if args.op == "expire":
         reports["expire"] = expire_snapshots(
             table, retain_last=args.retain_last, gc=True,
-            gc_grace_ms=args.gc_grace_ms, spark=spark,
+            gc_grace_ms=args.gc_grace_ms,
         )
 
     print(json.dumps(reports, default=str))

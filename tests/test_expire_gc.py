@@ -155,80 +155,59 @@ def test_staging_sweep_uses_newest_nested_mtime(spark, tmp_path):
     assert report["deleted_files"] == 0  # staging dirs are not data files
 
 
-def test_distributed_gc_matches_driver_gc(spark, tmp_path):
-    """The Spark-job reachability GC must delete exactly what the driver fold
-    deletes: same surviving files, same deletion count, on cloned tables."""
-    import shutil
-
-    from batch_pipeline_via_lakehouse_spark.operators.expire import (
-        expire_snapshots,
-        gc_orphans,
-    )
-
-    def build(name):
-        t = Table.create(str(tmp_path / name), TOKEN_SCHEMA, partition_by=["source"])
-        for k in range(3):
-            t.append(token_table_df(spark, 150, seed=500 + k), num_files=2)
-        t.overwrite(token_table_df(spark, 150, seed=503), num_files=2)
-        # drop every snapshot but the current -> earlier filesets are orphans
-        expire_snapshots(t, retain_last=1, gc=False)
-        # plus stray uncommitted files: one in a commit-style subdir, one
-        # sitting DIRECTLY in data/ (both paths must collect both)
-        stray = os.path.join(t.data_dir, "stray", "leftover.parquet")
-        os.makedirs(os.path.dirname(stray))
-        with open(stray, "w") as f:
+def test_gc_deletes_stray_files(spark, tmp_path):
+    """Reachability GC deletes the expired filesets and stray uncommitted
+    files — one in a commit-style subdir, one directly in data/ — while the
+    live files and the table content stay exactly as they were."""
+    t = Table.create(str(tmp_path / "t"), TOKEN_SCHEMA, partition_by=["source"])
+    for k in range(3):
+        t.append(token_table_df(spark, 150, seed=500 + k), num_files=2)
+    t.overwrite(token_table_df(spark, 150, seed=503), num_files=2)
+    # drop every snapshot but the current -> earlier filesets are orphans
+    expire_snapshots(t, retain_last=1, gc=False)
+    strays = [
+        os.path.join(t.data_dir, "stray", "leftover.parquet"),
+        os.path.join(t.data_dir, "root-leftover.parquet"),
+    ]
+    os.makedirs(os.path.dirname(strays[0]))
+    for p in strays:
+        with open(p, "w") as f:
             f.write("x")
-        with open(os.path.join(t.data_dir, "root-leftover.parquet"), "w") as f:
-            f.write("x")
-        return t
+    live = {os.path.join(t.root, f.path) for f in t.live_files()}
+    before = content_checksum(t.scan(spark))
+    orphans = _on_disk(t) - live
 
-    import os
-
-    t1 = build("t1")
-    shutil.copytree(t1.root, str(tmp_path / "t2"))
-    t2 = Table.load(str(tmp_path / "t2"))
-
-    r1 = gc_orphans(t1, grace_ms=0, distributed=False)
-    r2 = gc_orphans(t2, grace_ms=0, spark=spark, distributed=True)
-    assert r1["deleted_files"] == r2["deleted_files"] > 0
-
-    def files_under(root):
-        out = set()
-        for sub, _, names in os.walk(os.path.join(root, "data")):
-            out |= {os.path.relpath(os.path.join(sub, n), root) for n in names}
-        return out
-
-    assert files_under(t1.root) == files_under(t2.root)
-    assert content_checksum(t1.scan(spark)) == content_checksum(t2.scan(spark))
+    r = gc_orphans(t, grace_ms=0)
+    assert r["deleted_files"] >= len(orphans) > len(strays)
+    assert not any(os.path.exists(p) for p in strays)
+    assert _on_disk(t) == live
+    assert content_checksum(t.scan(spark)) == before
 
 
 def test_gc_sweep_scoped_to_touched_dirs(spark, tmp_path):
     """The empty-dir sweep runs only under dirs GC itself emptied: a
     pre-existing empty dir inside an UNTOUCHED commit dir survives (it is
     never even listed), while commit dirs whose files GC deleted are swept
-    away — on both the driver-fold and distributed paths."""
-    for mode in (False, True):
-        t = Table.create(
-            str(tmp_path / f"sw-{mode}"), TOKEN_SCHEMA, partition_by=["source"]
-        )
-        t.append(token_table_df(spark, 100, seed=31), num_files=2)
-        live_dirs = {
-            os.path.dirname(os.path.join(t.root, f.path)) for f in t.live_files()
-        }
-        t.overwrite(token_table_df(spark, 100, seed=32), num_files=2)
-        expire_snapshots(t, retain_last=1, gc=False)
-        orphan_dirs = live_dirs - {
-            os.path.dirname(os.path.join(t.root, f.path)) for f in t.live_files()
-        }
-        assert orphan_dirs
-        # plant an empty dir inside a LIVE (untouched) commit dir
-        live_dir = next(
-            os.path.dirname(os.path.join(t.root, f.path)) for f in t.live_files()
-        )
-        planted = os.path.join(live_dir, "planted-empty")
-        os.makedirs(planted)
-        r = gc_orphans(t, grace_ms=0, spark=spark, distributed=mode)
-        assert r["deleted_files"] > 0
-        assert os.path.isdir(planted)  # untouched dir never listed/swept
-        for d in orphan_dirs:
-            assert not os.path.exists(d)  # emptied-by-GC dirs are gone
+    away."""
+    t = Table.create(str(tmp_path / "sw"), TOKEN_SCHEMA, partition_by=["source"])
+    t.append(token_table_df(spark, 100, seed=31), num_files=2)
+    live_dirs = {
+        os.path.dirname(os.path.join(t.root, f.path)) for f in t.live_files()
+    }
+    t.overwrite(token_table_df(spark, 100, seed=32), num_files=2)
+    expire_snapshots(t, retain_last=1, gc=False)
+    orphan_dirs = live_dirs - {
+        os.path.dirname(os.path.join(t.root, f.path)) for f in t.live_files()
+    }
+    assert orphan_dirs
+    # plant an empty dir inside a LIVE (untouched) commit dir
+    live_dir = next(
+        os.path.dirname(os.path.join(t.root, f.path)) for f in t.live_files()
+    )
+    planted = os.path.join(live_dir, "planted-empty")
+    os.makedirs(planted)
+    r = gc_orphans(t, grace_ms=0)
+    assert r["deleted_files"] > 0
+    assert os.path.isdir(planted)  # untouched dir never listed/swept
+    for d in orphan_dirs:
+        assert not os.path.exists(d)  # emptied-by-GC dirs are gone

@@ -1,5 +1,6 @@
-"""Static inventories of the package source: the env knobs it reads, and the
-one data-file writer. Adding a knob or a second writer means changing a test
+"""Static inventories of the package source: the env knobs it reads, the one
+data-file writer, the one metadata planner and the one snapshot publisher.
+Adding a knob, a second writer, planner or publisher means changing a test
 here explicitly."""
 
 import pathlib
@@ -26,3 +27,24 @@ def test_table_data_files_have_one_writer():
                 if ".write." in line or re.search(r"(?<!Window)\.partitionBy\(", line):
                     hits.append(f"{p.relative_to(PKG)}:{n}: {line.strip()}")
     assert hits == []
+
+
+def test_one_metadata_planner():
+    """Scans, MERGE, compaction, clustering, commits and GC all plan with the
+    driver-side manifest fold: no file-count threshold or ``distributed``
+    switch selects a second, Spark-job planner."""
+    hits = []
+    for p in sorted(PKG.rglob("*.py")):
+        for n, line in enumerate(p.read_text().splitlines(), 1):
+            if re.search(r"DISTRIBUTED_|distributed: bool", line):
+                hits.append(f"{p.relative_to(PKG)}:{n}: {line.strip()}")
+    assert hits == []
+
+
+def test_one_snapshot_publisher():
+    """Only ``table/catalog.py`` names the VERSION pointer, so every snapshot
+    becomes current through ``Table.publish_snapshot``."""
+    found = {
+        str(p.relative_to(PKG)) for p in PKG.rglob("*.py") if '"VERSION"' in p.read_text()
+    }
+    assert found == {"table/catalog.py"}

@@ -291,25 +291,3 @@ def test_scd2_salted_equals_unsalted(spark, tmp_path):
         assert t.scan(spark).count() == len(hist) + len(cur) + 3
     assert outs["salted"] == outs["plain"]
 
-
-def test_merge_planning_distributed_matches_driver(spark, tmp_path):
-    """The distributed (mapInPandas-over-manifests) planning path must make
-    byte-identical decisions to the driver manifest fold: same affected file
-    set, same untouched count — including null-key sources (null-safe <=>
-    semantics live in the key scan both paths share)."""
-    from batch_pipeline_via_lakehouse_spark.operators.merge import _affected_files
-
-    t = Table.create(str(tmp_path / "t"), TOKEN_SCHEMA)
-    df = token_table_df(spark, 400, seed=5)
-    # several files so stats pruning has something to split on
-    t.append(df.filter(F.col("doc_id") < "0000100"), num_files=2)
-    t.append(df.filter(F.col("doc_id") >= "0000100"), num_files=3)
-    source = token_table_df(spark, 30, seed=77).unionByName(
-        token_table_df(spark, 1, seed=77).withColumn("doc_id", F.lit(None).cast("string"))
-    )
-    sid = t.current_snapshot_id()
-    aff_d, n_un_d = _affected_files(spark, t, source, ["doc_id"], sid, distributed=False)
-    aff_x, n_un_x = _affected_files(spark, t, source, ["doc_id"], sid, distributed=True)
-    assert sorted(f.path for f in aff_d) == sorted(f.path for f in aff_x)
-    assert n_un_d == n_un_x
-    assert {(f.rows, f.bytes) for f in aff_d} == {(f.rows, f.bytes) for f in aff_x}

@@ -219,37 +219,69 @@ def test_every_write_path_uses_the_table_arrow_schema(spark, tmp_path):
         assert got.equals(want, check_metadata=False), (p, got, want)
 
 
-def test_distributed_commit_matches_driver_commit(spark, tmp_path):
-    """The Spark-job manifest filter in commit() must produce the identical
-    snapshot as the driver fold: same live-file set, untouched manifests
-    reused by name, touched manifests rewritten minus the removed entries."""
-    import shutil
+def test_commit_reuses_untouched_manifests_by_name(spark, tmp_path):
+    """commit() rewrites only the manifests holding a removed path: every
+    other manifest, a zero-row one included, is carried by name; a manifest
+    whose entries are all removed is dropped; the removed paths are gone and
+    the remaining content is exactly the surviving files'."""
+    import os
 
-    src_root = str(tmp_path / "t")
-    t = Table.create(src_root, TOKEN_SCHEMA, partition_by=["source"])
+    import pyarrow.parquet as pq
+
+    t = Table.create(str(tmp_path / "t"), TOKEN_SCHEMA, partition_by=["source"])
     for k in range(6):  # 6 append snapshots -> 6 manifests
         t.append(token_table_df(spark, 200, seed=300 + k), num_files=2)
-    live = sorted(t.live_files(), key=lambda f: f.path)
-    assert len(t.snapshot(t.current_snapshot_id()).manifests) >= 6
-    # remove a subset that touches SOME manifests but not all
-    removed = {f.path for f in live[:: max(1, len(live) // 5)]}
+    parent = t.current_snapshot_id()
+    manifests = t.snapshot(parent).manifests
+    assert len(manifests) == 6
+    zero = "manifest-zerorow-test.parquet"
+    src = pq.read_table(os.path.join(t.metadata_dir, manifests[0]))
+    pq.write_table(src.slice(0, 0), os.path.join(t.metadata_dir, zero))
+    t.publish_snapshot(parent, "append", [*manifests, zero], {})
+    live = t.live_files()
 
-    clone_root = str(tmp_path / "t2")
-    shutil.copytree(src_root, clone_root)
-    t2 = Table.load(clone_root)
+    def paths_of(m):
+        return sorted(pq.read_table(os.path.join(t.metadata_dir, m)).column("path").to_pylist())
 
-    before_manifests = set(t.snapshot(t.current_snapshot_id()).manifests)
-    t.commit([], removed, "expire", distributed=False)
-    t2.commit([], removed, "expire", spark=spark, distributed=True)
+    partly, wholly = paths_of(manifests[1]), paths_of(manifests[3])
+    assert len(partly) > 1
+    removed = {partly[0], *wholly}
+    t.commit([], removed, "expire")
 
-    live1 = {f.path for f in t.live_files()}
-    live2 = {f.path for f in t2.live_files()}
-    assert live1 == live2
-    assert removed.isdisjoint(live1)
-    # untouched manifests reused by name on BOTH paths
-    kept1 = before_manifests & set(t.snapshot(t.current_snapshot_id()).manifests)
-    kept2 = before_manifests & set(t2.snapshot(t2.current_snapshot_id()).manifests)
-    assert kept1 == kept2
-    assert kept1  # some manifests genuinely untouched
-    # and the data content is identical
-    assert content_checksum(t.scan(spark)) == content_checksum(t2.scan(spark))
+    after = t.snapshot(t.current_snapshot_id()).manifests
+    untouched = [m for i, m in enumerate(manifests) if i not in (1, 3)] + [zero]
+    rewritten = [m for m in after if m not in untouched]
+    assert [m for m in after if m in untouched] == untouched  # reused by name
+    assert len(rewritten) == 1  # manifests[1] rewritten, manifests[3] dropped
+    assert paths_of(rewritten[0]) == partly[1:]
+    survivors = [f for f in live if f.path not in removed]
+    assert {f.path for f in t.live_files()} == {f.path for f in survivors}
+    assert content_checksum(t.scan(spark)) == content_checksum(t.read_files(spark, survivors))
+
+
+def test_commit_keeps_zero_row_manifest(spark, tmp_path):
+    """A zero-row manifest untouched by the removal set is carried by NAME
+    through commit(), not silently dropped, while the removal itself still
+    lands in a rewritten manifest."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    t = Table.create(str(tmp_path / "t"), TOKEN_SCHEMA, partition_by=["source"])
+    for k in range(3):
+        t.append(token_table_df(spark, 200, seed=310 + k), num_files=2)
+    parent = t.current_snapshot_id()
+    manifests = t.snapshot(parent).manifests
+    src = pq.read_table(os.path.join(t.metadata_dir, manifests[0]))
+    zero = "manifest-zerorow-test.parquet"
+    pq.write_table(src.slice(0, 0), os.path.join(t.metadata_dir, zero))
+    t.publish_snapshot(parent, "append", [*manifests, zero], {})
+
+    removed = {t.live_files()[0].path}
+    t.commit([], removed, "expire")
+    out = t.snapshot(t.current_snapshot_id()).manifests
+    assert zero in out  # carried by name, not silently dropped
+    kept_paths = set()
+    for m in out:
+        kept_paths |= set(pq.read_table(os.path.join(t.metadata_dir, m)).column("path").to_pylist())
+    assert removed.isdisjoint(kept_paths)
