@@ -12,36 +12,48 @@ Spark extension:
   by descending order columns before matching.
 
 Engine execution (this is the ⚙ part — we implement what the Iceberg
-extension did):
+extension did), one frame (`_merge`) for both modes:
 
 1. *Plan*: find the target files that contain matching keys by scanning ONLY
    the key columns plus ``input_file_name()`` and semi-joining the source
    keys — column-pruned, and the join is key-vs-key (high-cardinality,
    no hot keys; AQE handles residual skew). Files without matches are
    carried into the new snapshot by manifest reference — never rewritten.
-2. *Rewrite*: full-outer join affected-rows x source on the key; per column
-   pick source values for (insert | matched-and-changed) rows, target values
-   otherwise. Change detection is null-safe ``eqNullSafe`` over the tracked
-   columns (F16).
+2. *Rewrite*: a pure DataFrame rewrite of the affected rows against the
+   source — `scd1_rewrite` or `scd2_rewrite`, which the J5/J6 queries run
+   too. Keys match null-safe (``<=>``) and change detection is null-safe
+   ``eqNullSafe`` over the tracked columns (F16).
 3. *Commit*: one replace-snapshot (remove affected, add rewritten+inserted);
    one commit-log entry with lineage and metrics.
 
 A source key that matches no affected-file row matches no target row at all
 (by construction of step 1), so inserts need only an anti-join against the
 affected subset — the unaffected bulk of a 100 TB table is never read.
+
+``salt_buckets`` is structural skew handling for targets with hot duplicate
+keys (an SCD2 target holds one row PER VERSION per key): every key join
+salts its preserved side and replicates the other across salts
+(`_key_join`), so one hot key spreads over ``salt_buckets`` join partitions
+instead of melting one reducer. Without it AQE's skew split handles
+residual imbalance.
 """
 
 from __future__ import annotations
 
 import datetime
+import os
 import time
 import uuid
+from collections.abc import Callable
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..table.catalog import Table
 from .commitlog import CommitLog
+
+SCD2_COLS = ["is_current", "start_ts", "end_ts"]
 
 
 def dedup_source(source: DataFrame, key_cols: list[str], order_desc: list[str]) -> DataFrame:
@@ -101,6 +113,35 @@ def _merge_candidates(live: list, key_stats: dict[str, tuple]) -> list:
     return out
 
 
+def _key_join(
+    left: DataFrame,
+    right: DataFrame,
+    la: str,
+    ra: str,
+    key_cols: list[str],
+    how: str,
+    salt_buckets: int | None = None,
+) -> DataFrame:
+    """``left`` ⋈ ``right`` on null-safe ``<=>`` keys, each side's columns
+    kept under its alias ``la``/``ra`` (a NULL key is a real match, as in
+    the reference's MERGE).
+
+    With ``salt_buckets`` the left (skewed, preserved) side takes a uniform
+    random salt in [0, salt_buckets) and the right side is replicated across
+    every salt; the salt equality is one more equi-join key. Valid for
+    inner, left, semi and anti joins — each left row carries exactly one
+    salt and meets every right row once. NOT valid for right/full outer:
+    an unmatched right row would surface ``salt_buckets`` times."""
+    cond = [F.col(f"{la}.{k}").eqNullSafe(F.col(f"{ra}.{k}")) for k in key_cols]
+    if salt_buckets:
+        left = left.withColumn("_salt", F.floor(F.rand(seed=7) * salt_buckets).cast("int"))
+        right = right.withColumn(
+            "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
+        )
+        cond.append(F.col(f"{la}._salt") == F.col(f"{ra}._salt"))
+    return left.alias(la).join(right.alias(ra), on=cond, how=how)
+
+
 def _affected_files(
     spark: SparkSession,
     table: Table,
@@ -122,18 +163,11 @@ def _affected_files(
     # planning must classify files with the SAME match semantics the rewrite
     # uses (null-safe <=>): an on=key_cols semi-join would drop null-key
     # matches, mis-classify their file as untouched, and duplicate the key
-    null_safe = F.lit(True)
-    for k in key_cols:
-        null_safe = null_safe & F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-    keys_with_file = (
-        table.read_files(spark, cand)
-        .select(*key_cols, F.input_file_name().alias("_file"))
-        .alias("t")
-        .join(source.select(*key_cols).distinct().alias("s"), on=null_safe, how="left_semi")
+    keys_with_file = _key_join(
+        table.read_files(spark, cand).select(*key_cols, F.input_file_name().alias("_file")),
+        source.select(*key_cols).distinct(), "t", "s", key_cols, "left_semi",
     )
     hit_paths = {r["_file"] for r in keys_with_file.select("_file").distinct().collect()}
-
-    from urllib.parse import unquote, urlparse
 
     def norm(p: str) -> str:
         # input_file_name() yields a percent-encoded URI; decode it before
@@ -142,19 +176,152 @@ def _affected_files(
         u = urlparse(p)
         return unquote(u.path) if u.scheme else p
 
-    import os
-
     hit_rel = {os.path.relpath(norm(p), table.root) for p in hit_paths}
     affected = [f for f in cand if f.path in hit_rel]
     return affected, n_live - len(affected)
 
 
-def _changed_expr(tracked: list[str]) -> F.Column:
+def _changed_expr(tracked: list[str]) -> Column:
     """Null-safe any-column-differs (reference's `<=>` change test, F16)."""
     cond = F.lit(False)
     for c in tracked:
         cond = cond | ~F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}"))
     return cond
+
+
+def scd1_rewrite(
+    target: DataFrame,
+    source: DataFrame,
+    key_cols: list[str],
+    tracked: list[str],
+    salt_buckets: int | None = None,
+) -> DataFrame:
+    """SCD1 upsert of ``source`` into the ``target`` rows: a matched row
+    takes the source values only if a tracked column changed, an unmatched
+    source row is inserted, every other target row is carried. ``source``
+    has ``target``'s columns; so does the result."""
+    cols = target.columns
+    # presence markers: with null-safe key matching a NULL key can be a real
+    # match, so "did the other side match?" must come from a never-null
+    # marker column, not from the (nullable) key itself
+    t = target.withColumn("_t", F.lit(True))
+    s = source.withColumn("_s", F.lit(True))
+    # source values only for inserts and matched-and-changed rows; a target
+    # row with no source match sees changed=true vs all-null s.* — guard it
+    take_source = F.col("s._s").isNotNull() & (
+        F.col("t._t").isNull() | _changed_expr(tracked)
+    )
+    picked = [
+        F.coalesce(F.col(f"t.{c}"), F.col(f"s.{c}")).alias(c)
+        if c in key_cols
+        else F.when(take_source, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
+        for c in cols
+    ]
+    if not salt_buckets:
+        return _key_join(t, s, "t", "s", key_cols, "full_outer").select(*picked)
+    # a full outer join cannot be salted: updates and carries ride a salted
+    # left join, inserts an anti join against the DISTINCT target keys
+    # (collapses hot duplicates before the shuffle)
+    updated = _key_join(t, s, "t", "s", key_cols, "left", salt_buckets).select(*picked)
+    inserts = _key_join(
+        s, target.select(*key_cols).distinct(), "s", "t", key_cols, "left_anti"
+    ).select(*cols)
+    return updated.unionByName(inserts)
+
+
+def scd2_rewrite(
+    target: DataFrame,
+    source: DataFrame,
+    key_cols: list[str],
+    tracked: list[str],
+    ts: Column,
+    salt_buckets: int | None = None,
+) -> DataFrame:
+    """SCD2 versioning of the ``target`` rows by ``source``. Both reference
+    passes (`_silver_handler.py:175-188`) run in ONE rewrite: each
+    matched-and-changed current row is closed (is_current=false, end_ts=
+    ``ts``), and a new current version (start_ts=``ts``) is inserted for
+    every source key that has no current row (new key, or every version
+    already closed) or changed. ``target`` has SCD2_COLS and the data
+    columns, ``source`` the data columns; the result has ``target``'s."""
+    cols = target.columns
+    data_cols = [c for c in cols if c not in SCD2_COLS]
+    # never-null presence markers, as in scd1_rewrite
+    t = target.withColumn("_t", F.lit(True))
+    s = source.withColumn("_s", F.lit(True))
+    changed = _changed_expr(tracked)
+    close_row = F.col("s._s").isNotNull() & F.col("t.is_current") & changed
+    existing = _key_join(t, s, "t", "s", key_cols, "left", salt_buckets).select(
+        *[F.col(f"t.{c}").alias(c) for c in data_cols],
+        F.when(close_row, F.lit(False)).otherwise(F.col("t.is_current")).alias("is_current"),
+        F.col("t.start_ts").alias("start_ts"),
+        F.when(close_row, ts).otherwise(F.col("t.end_ts")).alias("end_ts"),
+    )
+    inserts = (
+        _key_join(s, t.filter(F.col("is_current")), "s", "t", key_cols, "left", salt_buckets)
+        .filter(F.col("t._t").isNull() | changed)
+        .select(
+            *[F.col(f"s.{c}").alias(c) for c in data_cols],
+            F.lit(True).alias("is_current"),
+            ts.alias("start_ts"),
+            F.lit(None).cast("timestamp").alias("end_ts"),
+        )
+    )
+    return existing.unionByName(inserts).select(*cols)
+
+
+def _merge(
+    spark: SparkSession,
+    table: Table,
+    source: DataFrame,
+    key_cols: list[str],
+    mode: str,
+    job_id: str,
+    rewrite: Callable[[DataFrame, DataFrame], DataFrame],
+) -> dict:
+    """The one MERGE frame: plan the affected files, rewrite their rows with
+    ``rewrite(target_rows, source)``, commit one replace-snapshot, log it."""
+    t0 = time.monotonic()
+    # one materialization for all three consumers (key-stats aggregate,
+    # planning semi-join, rewrite join): avoids recomputing an expensive
+    # source lineage and — crucial for correctness — guarantees the pruning
+    # stats describe the exact rows the scan and rewrite later see (a
+    # non-deterministic source re-evaluation could otherwise slip keys past
+    # the stats pre-prune)
+    source = source.persist()
+    try:
+        affected, n_untouched = _affected_files(
+            spark, table, source, key_cols, table.current_snapshot_id()
+        )
+        out_files = table.write_datafiles(rewrite(table.read_files(spark, affected), source))
+        sid = table.commit(
+            out_files,
+            {f.path for f in affected},
+            "merge",
+            {"job_id": job_id, "mode": mode, "affected-files": len(affected),
+             "carried-files": n_untouched},
+        )
+        CommitLog(table.root, job_id).record(
+            partition="merge",
+            input_files=[f.path for f in affected],
+            output_files=[f.path for f in out_files],
+            snapshot_id=sid,
+            rows=sum(f.rows for f in out_files),
+            bytes_=sum(f.bytes for f in out_files),
+            tokens=0,
+            seconds=time.monotonic() - t0,
+        )
+    finally:
+        # always release the cache — an exception between planning and commit
+        # (completeness gate, write failure) must not leak it for the
+        # session's lifetime
+        source.unpersist()
+    return {
+        "snapshot": sid,
+        "affected_files": len(affected),
+        "carried_files": n_untouched,
+        "written_files": len(out_files),
+    }
 
 
 def merge_scd1(
@@ -164,140 +331,20 @@ def merge_scd1(
     key_cols: list[str],
     tracked_cols: list[str] | None = None,
     dedup_order: list[str] | None = None,
-    broadcast_source: bool = False,
     salt_buckets: int | None = None,
     job_id: str | None = None,
 ) -> dict:
-    """Upsert ``source`` into ``table``; returns report with snapshot id.
-
-    ``salt_buckets``: structural skew handling (north_rule) for targets with
-    hot duplicate keys — the rewrite becomes a salted left join (updates +
-    carries) plus an anti-join (inserts) against the DISTINCT target keys, so
-    one hot key spreads over ``salt_buckets`` shuffle partitions instead of
-    melting one reducer. Default path is a single full-outer join and lets
-    AQE's skew-split handle residual imbalance."""
-    t0 = time.monotonic()
-    job_id = job_id or f"merge-{uuid.uuid4().hex[:12]}"
+    """Upsert ``source`` into ``table`` (`scd1_rewrite`); returns the report
+    with the new snapshot id."""
     cols = table.schema.fieldNames()
     tracked = tracked_cols or [c for c in cols if c not in key_cols]
     if dedup_order:
         source = dedup_source(source, key_cols, dedup_order)
-    # one materialization for all three consumers (key-stats aggregate,
-    # planning semi-join, rewrite join): avoids recomputing an expensive
-    # source lineage and — crucial for correctness — guarantees the pruning
-    # stats describe the exact rows the scan and rewrite later see (a
-    # non-deterministic source re-evaluation could otherwise slip keys past
-    # the stats pre-prune)
-    source = _src_cached = source.select(*cols).persist()
-    try:
-        return _merge_scd1_body(
-            spark, table, source, key_cols, tracked, broadcast_source,
-            salt_buckets, job_id, cols, t0,
-        )
-    finally:
-        # always release the cache — an exception between planning and commit
-        # (completeness gate, write failure) must not leak it for the
-        # session's lifetime
-        _src_cached.unpersist()
-
-
-def _merge_scd1_body(
-    spark, table, source, key_cols, tracked, broadcast_source, salt_buckets,
-    job_id, cols, t0,
-) -> dict:
-    base = table.current_snapshot_id()
-    affected, n_untouched = _affected_files(spark, table, source, key_cols, base)
-    # presence markers: with null-safe key matching a NULL key can be a real
-    # match, so "did the other side match?" must come from a never-null
-    # marker column, not from the (nullable) key itself
-    target_aff = table.read_files(spark, affected).withColumn("_t", F.lit(True))
-    source = source.withColumn("_s", F.lit(True))
-
-    is_insert = F.col("t._t").isNull()
-    s_present = F.col("s._s").isNotNull()
-    changed = _changed_expr(tracked)
-    # source values only for inserts and matched-and-changed rows; a target
-    # row with no source match sees changed=true vs all-null s.* — guard it
-    take_source = s_present & (is_insert | changed)
-
-    def _full_outer_rewrite(t_df: DataFrame, s_df: DataFrame) -> DataFrame:
-        key_eq = F.lit(True)
-        for k in key_cols:
-            key_eq = key_eq & F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-        joined = t_df.alias("t").join(s_df.alias("s"), on=key_eq, how="full_outer")
-        return joined.select(
-            *[
-                F.coalesce(F.col(f"t.{c}"), F.col(f"s.{c}")).alias(c)
-                if c in key_cols
-                else F.when(take_source, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-                for c in cols
-            ]
-        )
-
-    if salt_buckets:
-        from .salting import salted_equi_join
-
-        # null-key rows can't ride the salted on-list join (null != null
-        # there); route them through the null-safe full-outer rewrite — after
-        # source dedup that subset is at most one source row per null pattern
-        null_key = F.lit(False)
-        for k in key_cols:
-            null_key = null_key | F.col(k).isNull()
-        t_nn, t_null = target_aff.filter(~null_key), target_aff.filter(null_key)
-        s_nn, s_null = source.filter(~null_key), source.filter(null_key)
-        s_nn_j = F.broadcast(s_nn) if broadcast_source else s_nn
-
-        take_src_upd = s_present & changed
-        updated = salted_equi_join(
-            t_nn.alias("t"), s_nn_j.alias("s"), key_cols, how="left", buckets=salt_buckets
-        ).select(
-            *[
-                F.when(take_src_upd, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-                if c not in key_cols
-                else F.col(c)  # join-key columns are deduplicated by the on-list
-                for c in cols
-            ]
-        )
-        # inserts: anti join against DISTINCT target keys (collapses hot
-        # duplicates before the shuffle)
-        inserts = s_nn.join(
-            t_nn.select(*key_cols).distinct(), on=key_cols, how="left_anti"
-        ).select(*cols)
-        result = updated.unionByName(inserts).unionByName(
-            _full_outer_rewrite(t_null, s_null)
-        )
-    else:
-        src = F.broadcast(source) if broadcast_source else source
-        result = _full_outer_rewrite(target_aff, src)
-
-    out_files = table.write_datafiles(result)
-    sid = table.commit(
-        out_files,
-        {f.path for f in affected},
-        "merge",
-        {"job_id": job_id, "mode": "scd1", "affected-files": len(affected),
-         "carried-files": n_untouched},
+    return _merge(
+        spark, table, source.select(*cols), key_cols, "scd1",
+        job_id or f"merge-{uuid.uuid4().hex[:12]}",
+        lambda t, s: scd1_rewrite(t, s, key_cols, tracked, salt_buckets),
     )
-    log = CommitLog(table.root, job_id)
-    log.record(
-        partition="merge",
-        input_files=[f.path for f in affected],
-        output_files=[f.path for f in out_files],
-        snapshot_id=sid,
-        rows=sum(f.rows for f in out_files),
-        bytes_=sum(f.bytes for f in out_files),
-        tokens=0,
-        seconds=time.monotonic() - t0,
-    )
-    return {
-        "snapshot": sid,
-        "affected_files": len(affected),
-        "carried_files": n_untouched,
-        "written_files": len(out_files),
-    }
-
-
-SCD2_COLS = ["is_current", "start_ts", "end_ts"]
 
 
 def merge_scd2(
@@ -311,145 +358,15 @@ def merge_scd2(
     salt_buckets: int | None = None,
     job_id: str | None = None,
 ) -> dict:
-    """SCD2 merge: close matched-and-changed current rows, insert new
-    versions. Table schema must include is_current:boolean, start_ts, end_ts.
-    Both reference passes (`_silver_handler.py:175-188`) execute in ONE
-    copy-on-write rewrite here — same output, half the shuffles.
-
-    ``salt_buckets``: the same structural skew handling as merge_scd1 — an
-    SCD2 target accumulates one row PER VERSION per key, so a hot key's
-    version pile melts one reducer in the close-pass join. With salting the
-    close pass salts the (version-heavy) target against the replicated
-    source, and the insert pass salts the source against the replicated
-    current-rows-only target; null-key rows ride the null-safe unsalted
-    joins (at most one source row per null pattern after dedup)."""
-    t0 = time.monotonic()
-    job_id = job_id or f"merge2-{uuid.uuid4().hex[:12]}"
+    """SCD2 merge (`scd2_rewrite`): close matched-and-changed current rows,
+    insert new versions. Table schema must include is_current:boolean,
+    start_ts, end_ts."""
     ts = F.lit(effective_ts) if effective_ts else F.current_timestamp()
-    cols = table.schema.fieldNames()
-    data_cols = [c for c in cols if c not in SCD2_COLS]
+    data_cols = [c for c in table.schema.fieldNames() if c not in SCD2_COLS]
     if dedup_order:
         source = dedup_source(source, key_cols, dedup_order)
-    # persist: same single-evaluation guarantee as merge_scd1
-    source = _src_cached = source.select(*[c for c in data_cols]).persist()
-    try:
-        return _merge_scd2_body(
-            spark, table, source, key_cols, tracked_cols, ts, salt_buckets,
-            job_id, cols, data_cols, t0,
-        )
-    finally:
-        _src_cached.unpersist()
-
-
-def _merge_scd2_body(
-    spark, table, source, key_cols, tracked_cols, ts, salt_buckets, job_id,
-    cols, data_cols, t0,
-) -> dict:
-    base = table.current_snapshot_id()
-    affected, n_untouched = _affected_files(spark, table, source, key_cols, base)
-    # never-null presence markers (see merge_scd1): with eqNullSafe matching,
-    # a NULL key can be a genuine match, so presence tests can't use the key
-    target_aff = table.read_files(spark, affected).withColumn("_t", F.lit(True))
-    source = source.withColumn("_s", F.lit(True))
-
-    key_eq = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in key_cols]
-    changed = _changed_expr(tracked_cols)
-    s_missing = F.col("s._s").isNull()
-
-    # pass 1 equivalent: close matched-and-changed CURRENT rows, carry the rest
-    close_row = ~s_missing & F.col("t.is_current") & changed
-    # pass 2 equivalent: insert a new current version when the key has no
-    # current row (new key, or every version already closed) or it changed
-    cur_missing = F.col("t._t").isNull()
-
-    def _existing_sel(joined: DataFrame, keys_from_onlist: bool) -> DataFrame:
-        return joined.select(
-            *[
-                F.col(c) if keys_from_onlist and c in key_cols
-                else F.col(f"t.{c}").alias(c)
-                for c in data_cols
-            ],
-            F.when(close_row, F.lit(False)).otherwise(F.col("t.is_current")).alias("is_current"),
-            F.col("t.start_ts").alias("start_ts"),
-            F.when(close_row, ts).otherwise(F.col("t.end_ts")).alias("end_ts"),
-        )
-
-    def _inserts_sel(joined: DataFrame, keys_from_onlist: bool) -> DataFrame:
-        return joined.filter(cur_missing | changed).select(
-            *[
-                F.col(c) if keys_from_onlist and c in key_cols
-                else F.col(f"s.{c}").alias(c)
-                for c in data_cols
-            ],
-            F.lit(True).alias("is_current"),
-            ts.alias("start_ts"),
-            F.lit(None).cast("timestamp").alias("end_ts"),
-        )
-
-    if salt_buckets:
-        from .salting import salted_equi_join
-
-        null_key = F.lit(False)
-        for k in key_cols:
-            null_key = null_key | F.col(k).isNull()
-        t_nn, t_null = target_aff.filter(~null_key), target_aff.filter(null_key)
-        s_nn, s_null = source.filter(~null_key), source.filter(null_key)
-        existing = _existing_sel(
-            salted_equi_join(
-                t_nn.alias("t"), s_nn.alias("s"), key_cols,
-                how="left", buckets=salt_buckets,
-            ),
-            True,
-        ).unionByName(
-            _existing_sel(
-                t_null.alias("t").join(s_null.alias("s"), on=key_eq, how="left_outer"),
-                False,
-            )
-        )
-        inserts = _inserts_sel(
-            salted_equi_join(
-                s_nn.alias("s"), t_nn.filter(F.col("is_current")).alias("t"),
-                key_cols, how="left", buckets=salt_buckets,
-            ),
-            True,
-        ).unionByName(
-            _inserts_sel(
-                s_null.alias("s").join(
-                    t_null.filter(F.col("is_current")).alias("t"),
-                    on=key_eq, how="left_outer",
-                ),
-                False,
-            )
-        )
-    else:
-        existing = _existing_sel(
-            target_aff.alias("t").join(source.alias("s"), on=key_eq, how="left_outer"),
-            False,
-        )
-        inserts = _inserts_sel(
-            source.alias("s").join(
-                target_aff.filter(F.col("is_current")).alias("t"),
-                on=key_eq, how="left_outer",
-            ),
-            False,
-        )
-    result = existing.unionByName(inserts).select(*cols)
-
-    out_files = table.write_datafiles(result)
-    sid = table.commit(
-        out_files,
-        {f.path for f in affected},
-        "merge",
-        {"job_id": job_id, "mode": "scd2", "affected-files": len(affected)},
+    return _merge(
+        spark, table, source.select(*data_cols), key_cols, "scd2",
+        job_id or f"merge2-{uuid.uuid4().hex[:12]}",
+        lambda t, s: scd2_rewrite(t, s, key_cols, tracked_cols, ts, salt_buckets),
     )
-    CommitLog(table.root, job_id).record(
-        partition="merge",
-        input_files=[f.path for f in affected],
-        output_files=[f.path for f in out_files],
-        snapshot_id=sid,
-        rows=sum(f.rows for f in out_files),
-        bytes_=sum(f.bytes for f in out_files),
-        tokens=0,
-        seconds=time.monotonic() - t0,
-    )
-    return {"snapshot": sid, "affected_files": len(affected), "carried_files": n_untouched}

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.merge import scd2_rewrite
 from .registry import load, load_wide, query
 
 _FEATURE_SCHEMA = (
@@ -274,8 +275,9 @@ def ema_features(spark, sf_dir) -> DataFrame:
 )
 def scd2_versions(spark, sf_dir) -> DataFrame:
     """SCD2 MERGE classification (J6; `src/elt/silver/_silver_handler.py:156-192`)
-    as a pure query: close changed current rows, insert new versions —
-    the same plan operators/merge.py:merge_scd2 executes copy-on-write."""
+    run through the engine's own copy-on-write rewrite
+    (`operators/merge.py:scd2_rewrite`): close changed current rows, insert
+    new versions."""
     ts0 = datetime.datetime(2026, 1, 1)
     ts1 = datetime.datetime(2026, 2, 1)
     o = load(spark, sf_dir, "orders")
@@ -283,7 +285,8 @@ def scd2_versions(spark, sf_dir) -> DataFrame:
         "o_orderkey",
         F.round("o_totalprice", 4).alias("price"),
         F.lit(True).alias("is_current"),
-        F.unix_micros(F.lit(ts0).cast("timestamp")).alias("start_us"),
+        F.lit(ts0).alias("start_ts"),
+        F.lit(None).cast("timestamp").alias("end_ts"),
     )
     source = (
         o.filter(F.col("o_orderkey") % 6 == 0)
@@ -297,26 +300,15 @@ def scd2_versions(spark, sf_dir) -> DataFrame:
             )
         )
     )
-    t, s = target.alias("t"), source.alias("s")
-    matched_changed = F.col("s.o_orderkey").isNotNull() & (F.col("s.price") != F.col("t.price"))
-    end_us = F.unix_micros(F.lit(ts1).cast("timestamp"))
-    closed = t.join(s, F.col("t.o_orderkey") == F.col("s.o_orderkey"), "left_outer").select(
-        F.col("t.o_orderkey").alias("o_orderkey"),
-        F.col("t.price").alias("price"),
-        F.when(matched_changed, F.lit(False)).otherwise(F.lit(True)).alias("is_current"),
-        F.col("t.start_us").alias("start_us"),
-        F.when(matched_changed, end_us).cast("long").alias("end_us"),
-    )
-    inserts = s.join(t, F.col("t.o_orderkey") == F.col("s.o_orderkey"), "left_outer").filter(
-        F.col("t.o_orderkey").isNull() | (F.col("s.price") != F.col("t.price"))
+    return scd2_rewrite(
+        target, source, ["o_orderkey"], ["price"], F.lit(ts1)
     ).select(
-        F.col("s.o_orderkey").alias("o_orderkey"),
-        F.col("s.price").alias("price"),
-        F.lit(True).alias("is_current"),
-        end_us.alias("start_us"),
-        F.lit(None).cast("long").alias("end_us"),
+        "o_orderkey",
+        "price",
+        "is_current",
+        F.unix_micros("start_ts").alias("start_us"),
+        F.unix_micros("end_ts").alias("end_us"),
     )
-    return closed.unionByName(inserts)
 
 
 # --------------------------------------------------------------------------

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.merge import scd1_rewrite
 from .registry import load, query
 
 
@@ -528,8 +529,8 @@ def date_spine(spark, sf_dir) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# MERGE semantics as a pure query (J5/J6) — classification logic shared with
-# the engine operator, oracled in SQL.
+# MERGE semantics as a pure query (J5/J6) — the engine operator's rewrite,
+# oracled in SQL.
 
 
 @query(
@@ -553,8 +554,8 @@ def date_spine(spark, sf_dir) -> DataFrame:
 )
 def merge_upsert(spark, sf_dir) -> DataFrame:
     """SCD1 MERGE classification (J5; `src/elt/silver/_silver_handler.py:195-224`)
-    expressed as the same full-outer-join plan the engine's copy-on-write
-    MERGE executes (operators/merge.py)."""
+    run through the engine's own copy-on-write rewrite
+    (`operators/merge.py:scd1_rewrite`)."""
     o = load(spark, sf_dir, "orders")
     target = o.select(
         "o_orderkey", "o_custkey", F.round("o_totalprice", 4).alias("o_totalprice"), "o_orderstatus"
@@ -568,14 +569,8 @@ def merge_upsert(spark, sf_dir) -> DataFrame:
             F.lit("P").alias("o_orderstatus"),
         )
     )
-    t, s = target.alias("t"), source.alias("s")
-    joined = t.join(s, F.col("t.o_orderkey") == F.col("s.o_orderkey"), "full_outer")
-    take_s = F.col("s.o_orderkey").isNotNull()
-    return joined.select(
-        F.coalesce(F.col("t.o_orderkey"), F.col("s.o_orderkey")).alias("o_orderkey"),
-        F.coalesce(F.col("t.o_custkey"), F.col("s.o_custkey")).alias("o_custkey"),
-        F.when(take_s, F.col("s.o_totalprice")).otherwise(F.col("t.o_totalprice")).alias("o_totalprice"),
-        F.when(take_s, F.col("s.o_orderstatus")).otherwise(F.col("t.o_orderstatus")).alias("o_orderstatus"),
+    return scd1_rewrite(
+        target, source, ["o_orderkey"], ["o_custkey", "o_totalprice", "o_orderstatus"]
     )
 
 

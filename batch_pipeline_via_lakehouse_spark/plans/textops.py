@@ -534,7 +534,13 @@ def decontaminate(spark, sf_dir) -> DataFrame:
     )
 
 
+# round cap of the distributed loop: a component it cannot close in this
+# many rounds raises instead of returning wrong labels
 _CC_MAX_ITERS = 20
+# first round of the distributed loop that adds pointer doubling: each round's
+# cost is fixed-overhead dominated at any scale where the label table fits a
+# few shuffle partitions, so fewer-but-slightly-fatter rounds win
+_CC_DOUBLING_FROM = 2
 
 # edge count at or below which connected_components solves the graph in ONE
 # executor task (NumPy union-find over the materialized pair list) instead of
@@ -655,13 +661,32 @@ def _cc_uf_task(batches):
     )
 
 
+def _fresh_stats_frame(ck: DataFrame) -> DataFrame:
+    """Rebuild a checkpointed frame as a plain LogicalRDD scan with FRESH
+    statistics, through private JVM APIs (``internalCreateDataFrame``,
+    ``queryExecution().toRdd()``).
+
+    Dataset.checkpoint preserves the ORIGIN plan's statistics on the
+    checkpointed relation; in an iterated self-join loop those stats
+    COMPOUND multiplicatively (join sizeInBytes = product of the
+    children's), so after k rounds the checkpoint carries a ~4^k-bit BigInt
+    size and Catalyst's size-only stats visitor spends its time in
+    BigInteger multiplication — measured: round cost exploding 4-5x per
+    round from ~round 10 (0.5 s -> 230 s by round 13) with the rebuild flat
+    at ~0.4 s/round. The rebuilt frame scans the SAME materialized RDD
+    (toRdd of a checkpointed plan IS that RDD), so no recompute; with AQE
+    on, join strategies are re-decided from runtime sizes anyway."""
+    spark, jdf = ck.sparkSession, ck._jdf
+    fresh = spark._jsparkSession.internalCreateDataFrame(
+        jdf.queryExecution().toRdd(), jdf.schema(), False
+    )
+    return DataFrame(fresh, spark)
+
+
 def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
-    max_iters: int = _CC_MAX_ITERS,
-    doubling_from: int = 2,
     checkpoint_dir: str | None = None,
-    small_max_edges: int | None = _CC_SMALL_MAX_EDGES,
 ) -> DataFrame:
     """Min-label connected components over an undirected pair list:
     ``vertices (v)``, ``edges (a, b)`` -> ``(v, lbl)`` where lbl is the MIN
@@ -677,25 +702,22 @@ def connected_components(
       labels(v) = v followed by a full round, the init groupBy computes
       lbl(v) = least(v, min(neighbors)) directly — same shuffle as the old
       distinct, one fewer round of fixed per-round cost;
-    - rounds 0..doubling_from-1 are plain min-label propagation (one
-      edge⋈label join + min-groupBy);
-    - from round ``doubling_from`` (default 2 — each round's cost is fixed
-      overhead-dominated at any scale where the label table fits a few
-      shuffle partitions, so fewer-but-slightly-fatter rounds win) POINTER
-      DOUBLING engages: each round also joins labels to themselves
-      (v -> lbl(lbl(v))), so label depth doubles per round and convergence
-      is O(log diameter) — an adversarial boilerplate chain of length 10^6
-      converges in ~doubling_from + log2(10^6) ≈ 22 rounds instead of 10^6;
+    - rounds before ``_CC_DOUBLING_FROM`` are plain min-label propagation
+      (one edge⋈label join + min-groupBy);
+    - from round ``_CC_DOUBLING_FROM`` POINTER DOUBLING engages: each round
+      also joins labels to themselves (v -> lbl(lbl(v))), so label depth
+      doubles per round and convergence is O(log diameter) — an adversarial
+      boilerplate chain of length 10^6 converges in ~_CC_DOUBLING_FROM +
+      log2(10^6) ≈ 22 rounds instead of 10^6;
     - the convergence probe is FOLDED into the update job: the min-groupBy
       carries the previous label alongside the new one, so detecting the
       fixed point is a filter over the just-persisted result — no extra
       join job per round;
     - SCALE-ADAPTIVE: when the materialized edge list is small enough for
-      one task (``small_max_edges``, default ~4M pairs), the entire
-      propagation collapses into a single vectorized NumPy union-find task
+      one task (``_CC_SMALL_MAX_EDGES``, ~4M pairs), the entire propagation
+      collapses into a single vectorized NumPy union-find task
       (`_cc_min_label_kernel`) — identical labels, one job instead of
-      ~log(diameter) rounds. Pass ``small_max_edges=0/None`` to force the
-      distributed loop.
+      ~log(diameter) rounds.
 
     Each round is localCheckpoint-ed executor-side (never a driver collect —
     the mapping is pair-bounded but can be large): that truncates the
@@ -704,7 +726,7 @@ def connected_components(
     checkpoint is materialized, the PREVIOUS round's checkpointed RDD is
     explicitly unpersisted (found via the context's persistent-RDD registry —
     the checkpointed RDD is not reachable as a Python attribute), so executor
-    storage holds at most two label sets instead of max_iters.
+    storage holds at most two label sets instead of one per round.
 
     ``checkpoint_dir``: when set, every round materializes through a
     RELIABLE ``df.checkpoint()`` into that directory (persistent storage —
@@ -720,14 +742,14 @@ def connected_components(
     # --- scale-adaptive small-graph path ---------------------------------
     # The distributed loop costs ~log(diameter) full Spark rounds (each a
     # join + min-groupBy + checkpoint job) of near-fixed latency; when the
-    # whole edge list fits ONE task (<= small_max_edges, ~64 MB of int64
+    # whole edge list fits ONE task (<= _CC_SMALL_MAX_EDGES, ~64 MB of int64
     # pairs) the same min-label fixed point comes out of a single
     # vectorized union-find task over the materialized pairs — the
     # broadcast-threshold pattern of algorithm choice, decided per run from
     # the actual edge count, never cached across runs. Disabled in durable
     # checkpoint_dir mode (that mode exists for runs big enough to lose
     # executors) and for non-integer vertex ids.
-    if small_max_edges and checkpoint_dir is None:
+    if _CC_SMALL_MAX_EDGES and checkpoint_dir is None:
         from pyspark.sql.types import IntegralType
 
         if all(
@@ -738,7 +760,7 @@ def connected_components(
             if n_edges == 0:
                 e0.unpersist()
                 return vertices.select("v", F.col("v").alias("lbl"))
-            if n_edges <= small_max_edges:
+            if n_edges <= _CC_SMALL_MAX_EDGES:
                 labels = (
                     e0.coalesce(1)
                     .mapInArrow(_cc_uf_task, "v long, lbl long")
@@ -785,35 +807,23 @@ def connected_components(
 
     def _materialize(df: DataFrame):
         """Checkpoint ``df`` eagerly; return (frame, checkpointed java RDD).
-
-        The returned frame is REBUILT as a plain LogicalRDD scan with FRESH
-        statistics. Dataset.checkpoint preserves the ORIGIN plan's
-        statistics on the checkpointed relation; in an iterated self-join
-        loop those stats COMPOUND multiplicatively (join sizeInBytes =
-        product of the children's), so after k rounds the checkpoint
-        carries a ~4^k-bit BigInt size and Catalyst's size-only stats
-        visitor spends its time in BigInteger multiplication — measured:
-        round cost exploding 4-5x per round from ~round 10 (0.5 s -> 230 s
-        by round 13) with the rebuild flat at ~0.4 s/round. The rebuilt
-        frame scans the SAME materialized RDD (toRdd of a checkpointed
-        plan IS that RDD), so no recompute; with AQE on, join strategies
-        are re-decided from runtime sizes anyway. The raw checkpointed RDD
-        is returned for explicit unpersist once the NEXT round has
-        materialized (executor storage holds <= 2 label sets)."""
-        spark = df.sparkSession
+        The frame is `_fresh_stats_frame` of the checkpoint, or — if that
+        private-API rebuild raises — the checkpointed frame itself (same
+        labels, only its statistics compound across rounds). The raw
+        checkpointed RDD is returned for explicit unpersist once the NEXT
+        round has materialized (executor storage holds <= 2 label sets)."""
         if checkpoint_dir is not None:
             ck = df.checkpoint(eager=True)
         else:
             ck = df.localCheckpoint(eager=True)
-        jdf = ck._jdf
         try:
-            ck_rdd = jdf.queryExecution().analyzed().rdd()
+            ck_rdd = ck._jdf.queryExecution().analyzed().rdd()
         except Exception:  # noqa: BLE001 — plan shape changed; GC will clean
             ck_rdd = None
-        fresh = spark._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False
-        )
-        return DataFrame(fresh, spark), ck_rdd
+        try:
+            return _fresh_stats_frame(ck), ck_rdd
+        except Exception:  # noqa: BLE001 — private JVM API changed
+            return ck, ck_rdd
 
     labels, prev_rdd = _materialize(
         edges_sym.groupBy(F.col("a").alias("v"))
@@ -821,7 +831,7 @@ def connected_components(
         .select("v", F.least(F.col("v"), F.col("_mn")).alias("lbl"))
     )
     try:
-        for it in range(max_iters):
+        for it in range(_CC_MAX_ITERS):
             own = labels.select("v", "lbl", F.lit(True).alias("_own"))
             msgs = (
                 edges_sym.alias("e")
@@ -852,7 +862,7 @@ def connected_components(
                 )
             )
             cand = own.unionByName(msgs).unionByName(msgs2)
-            if it >= doubling_from:
+            if it >= _CC_DOUBLING_FROM:
                 # pointer doubling, TWO jumps per round: v adopts
                 # lbl(lbl(v)) and lbl(lbl(lbl(v))) — label depth triples per
                 # round (log3 convergence) for two extra joins over the tiny
@@ -910,8 +920,8 @@ def connected_components(
         else:
             # never return silently-wrong clusters: not converged
             raise RuntimeError(
-                f"connected_components did not converge in {max_iters} rounds "
-                "(raise max_iters or lower doubling_from)"
+                f"connected_components did not converge in {_CC_MAX_ITERS} rounds "
+                "(raise _CC_MAX_ITERS or lower _CC_DOUBLING_FROM)"
             )
         final = labels
     finally:

@@ -1,7 +1,7 @@
 """Static inventories of the package source: the env knobs it reads, the one
-data-file writer, the one metadata planner and the one snapshot publisher.
-Adding a knob, a second writer, planner or publisher means changing a test
-here explicitly."""
+data-file writer, the one metadata planner, the one snapshot publisher and
+the one MERGE rewrite. Adding a knob, a second writer, planner, publisher or
+MERGE rewrite means changing a test here explicitly."""
 
 import pathlib
 import re
@@ -48,3 +48,19 @@ def test_one_snapshot_publisher():
         str(p.relative_to(PKG)) for p in PKG.rglob("*.py") if '"VERSION"' in p.read_text()
     }
     assert found == {"table/catalog.py"}
+
+
+def test_one_merge_rewrite():
+    """MERGE rewrites live only in ``operators/merge.py``: the J5/J6 queries
+    call its rewrites instead of re-joining by hand, and salting is a join
+    choice there, not a second join helper."""
+    full_outer = {
+        str(p.relative_to(PKG)) for p in PKG.rglob("*.py") if '"full_outer"' in p.read_text()
+    }
+    assert full_outer == {"operators/merge.py"}
+    salted = [
+        str(p.relative_to(PKG))
+        for p in PKG.rglob("*.py")
+        if re.search(r"def salted_equi_join\b", p.read_text())
+    ]
+    assert salted == []

@@ -53,7 +53,7 @@ def test_scd1_copy_on_write_touches_only_matching_files(spark, tmp_path):
     n_files = len(t.live_files())
 
     source = token_table_df(spark, 40, seed=77)  # doc-...0000..0039: one range
-    r = merge_scd1(spark, t, source, key_cols=["doc_id"], broadcast_source=True)
+    r = merge_scd1(spark, t, source, key_cols=["doc_id"])
     assert r["affected_files"] < n_files // 2
     assert r["carried_files"] == n_files - r["affected_files"]
     assert t.scan(spark).count() == 2000  # pure update, no inserts
@@ -131,21 +131,50 @@ def test_scd2_versions(spark, tmp_path):
     assert t.scan(spark).filter("is_current").count() == 3
 
 
+def test_scd1_and_scd2_reports_agree(spark, tmp_path):
+    """Both MERGE modes run the one plan -> rewrite -> commit -> log frame:
+    the same report keys and the same snapshot-summary keys."""
+    t1 = Table.create(str(tmp_path / "t1"), TOKEN_SCHEMA)
+    t1.append(token_table_df(spark, 50, seed=1))
+    r1 = merge_scd1(spark, t1, token_table_df(spark, 10, seed=2), key_cols=["doc_id"])
+
+    t2 = Table.create(str(tmp_path / "t2"), SCD2_SCHEMA)
+    ts0 = datetime.datetime(2026, 1, 1)
+    t2.append(spark.createDataFrame([("a", 10, "web", True, ts0, None)], SCD2_SCHEMA))
+    r2 = merge_scd2(
+        spark, t2, _scd2_src(spark, [("a", 11, "web"), ("b", 1, "wiki")]),
+        key_cols=["doc_id"], tracked_cols=["n_tok", "source"],
+    )
+    assert r1.keys() == r2.keys()
+    s1 = t1.snapshot(r1["snapshot"]).summary
+    s2 = t2.snapshot(r2["snapshot"]).summary
+    assert s1.keys() == s2.keys()
+    assert (s2["mode"], s2["carried-files"]) == ("scd2", r2["carried_files"])
+    assert r2["written_files"] == s2["added-files"] >= 1
+
+
 def test_scd1_salted_equals_unsalted(spark, tmp_path):
-    """Hot-duplicate-key target: salted path must produce identical content."""
+    """Hot-duplicate-key target: salted path must produce identical content,
+    including a null-key row, which matches null-safe inside the salted
+    join."""
     # target with one hot key: 400 duplicate rows of doc-0 + 200 normal rows
     hot = token_table_df(spark, 400, seed=5).withColumn("doc_id", F.lit("hot-doc"))
     normal = token_table_df(spark, 200, seed=6)
-    for salt, sub in (("a", hot), ("b", normal)):
+
+    def null_key(df):
+        return df.withColumn("doc_id", F.lit(None).cast("string"))
+
+    for salt in ("a", "b"):
         t = Table.create(str(tmp_path / f"t-{salt}"), TOKEN_SCHEMA)
-        t.append(hot.unionByName(normal))
+        t.append(hot.unionByName(normal).unionByName(null_key(token_table_df(spark, 1, seed=11))))
         src = token_table_df(spark, 50, seed=9).unionByName(
             token_table_df(spark, 1, seed=10).withColumn("doc_id", F.lit("hot-doc"))
-        )
+        ).unionByName(null_key(token_table_df(spark, 1, seed=12)))
         merge_scd1(
             spark, t, src, key_cols=["doc_id"],
             salt_buckets=8 if salt == "a" else None,
         )
+        assert t.scan(spark).count() == 601  # every source key matched
         if salt == "a":
             salted_out = content_checksum(t.scan(spark), COLS)
         else:

@@ -45,7 +45,7 @@ def test_random_op_sequence_preserves_content(spark, tmp_path_factory, ops, seed
             cluster(spark, t, mode="zorder", target_bytes=4 * 1024 * 1024)
         elif op == "merge":
             src = token_table_df(spark, 30, seed=seed + 100 + i, start=10)
-            merge_scd1(spark, t, src, key_cols=["doc_id"], broadcast_source=True)
+            merge_scd1(spark, t, src, key_cols=["doc_id"])
             model_df = src.unionByName(model_df.join(src, "doc_id", "left_anti"))
         elif op == "expire":
             expire_snapshots(t, retain_last=2, gc=True, gc_grace_ms=0)

@@ -161,43 +161,64 @@ def test_dedup_clusters_matches_pairwise_closure(spark):
         assert cluster == exp, (doc, cluster, exp)
 
 
-def test_connected_components_long_chain_pointer_doubling(spark):
-    """A 200-node path (diameter 199) must converge WELL under the 20-round
-    cap via pointer doubling — plain propagation would need 199 rounds."""
-    from batch_pipeline_via_lakehouse_spark.plans.textops import connected_components
-
-    n = 200
+def _long_chain_labels(spark, textops, n=200):
     verts = spark.createDataFrame([(v,) for v in range(1, n + 2)], "v long")
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, n)], "a long, b long"
     )
-    got = {
-        r.v: r.lbl
-        for r in connected_components(verts, chain, small_max_edges=0).collect()
-    }
-    assert got == {**{v: 1 for v in range(1, n + 1)}, n + 1: n + 1}
+    got = {r.v: r.lbl for r in textops.connected_components(verts, chain).collect()}
+    return got, {**{v: 1 for v in range(1, n + 1)}, n + 1: n + 1}
 
 
-def test_connected_components_raises_past_round_cap(spark):
-    """A component whose diameter exceeds max_iters must raise, never return
-    silently-wrong clusters."""
-    import pytest
+def test_connected_components_long_chain_pointer_doubling(spark, monkeypatch):
+    """A 200-node path (diameter 199) must converge WELL under the 20-round
+    cap via pointer doubling — plain propagation would need 199 rounds."""
+    from batch_pipeline_via_lakehouse_spark.plans import textops
 
-    from batch_pipeline_via_lakehouse_spark.plans.textops import connected_components
+    monkeypatch.setattr(textops, "_CC_SMALL_MAX_EDGES", 0)
+    got, want = _long_chain_labels(spark, textops)
+    assert got == want
 
+
+def test_connected_components_private_api_fallback(spark, monkeypatch):
+    """If the private-API fresh-stats rebuild raises, every round falls back
+    to the plain checkpointed frame: the long-chain loop still converges to
+    identical labels."""
+    from batch_pipeline_via_lakehouse_spark.plans import textops
+
+    failed = []
+
+    def broken(ck):
+        failed.append(ck)
+        raise AttributeError("internalCreateDataFrame")
+
+    monkeypatch.setattr(textops, "_CC_SMALL_MAX_EDGES", 0)
+    monkeypatch.setattr(textops, "_fresh_stats_frame", broken)
+    got, want = _long_chain_labels(spark, textops)
+    assert got == want
+    assert len(failed) >= 2  # the init round and at least one loop round
+
+
+def test_connected_components_raises_past_round_cap(spark, monkeypatch):
+    """A component whose diameter exceeds the round cap must raise, never
+    return silently-wrong clusters."""
+    from batch_pipeline_via_lakehouse_spark.plans import textops
+
+    monkeypatch.setattr(textops, "_CC_SMALL_MAX_EDGES", 0)
+    monkeypatch.setattr(textops, "_CC_MAX_ITERS", 2)
     verts = spark.createDataFrame([(v,) for v in range(1, 9)], "v long")
     chain = spark.createDataFrame([(i, i + 1) for i in range(1, 8)], "a long, b long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(verts, chain, max_iters=2, small_max_edges=0)
+        textops.connected_components(verts, chain)
 
 
-def test_connected_components_small_path_matches_loop(spark):
+def test_connected_components_small_path_matches_loop(spark, monkeypatch):
     """The single-task union-find fast path must produce IDENTICAL labels to
     the distributed doubling loop on an adversarial random graph (chains,
     cliques, self-loops, duplicate + reversed edges, singletons)."""
     import random
 
-    from batch_pipeline_via_lakehouse_spark.plans.textops import connected_components
+    from batch_pipeline_via_lakehouse_spark.plans import textops
 
     rng = random.Random(7)
     n = 400
@@ -207,11 +228,9 @@ def test_connected_components_small_path_matches_loop(spark):
     edges += [(b, a) for a, b in edges[:50]] + [(5, 5)]      # reversed + self
     verts = spark.createDataFrame([(v,) for v in range(1, n + 1)], "v long")
     e = spark.createDataFrame(edges, "a long, b long")
-    fast = {r.v: r.lbl for r in connected_components(verts, e).collect()}
-    loop = {
-        r.v: r.lbl
-        for r in connected_components(verts, e, small_max_edges=0).collect()
-    }
+    fast = {r.v: r.lbl for r in textops.connected_components(verts, e).collect()}
+    monkeypatch.setattr(textops, "_CC_SMALL_MAX_EDGES", 0)
+    loop = {r.v: r.lbl for r in textops.connected_components(verts, e).collect()}
     assert fast == loop
 
 
@@ -307,19 +326,20 @@ def test_gram_pipelines_survive_short_docs(spark, tmp_path):
     assert ngram_jaccard_pairs(spark, sf).count() >= 0  # runs clean
 
 
-def test_connected_components_unpersists_round_checkpoints(spark):
+def test_connected_components_unpersists_round_checkpoints(spark, monkeypatch):
     """Executor storage must hold a BOUNDED number of label sets: each
     round's localCheckpoint is explicitly unpersisted once the next round
-    materializes, so a long-diameter run cannot accumulate max_iters
-    checkpointed RDDs (ADVICE r05)."""
-    from batch_pipeline_via_lakehouse_spark.plans.textops import connected_components
+    materializes, so a long-diameter run cannot accumulate one checkpointed
+    RDD per round (ADVICE r05)."""
+    from batch_pipeline_via_lakehouse_spark.plans import textops
 
+    monkeypatch.setattr(textops, "_CC_SMALL_MAX_EDGES", 0)
     sc = spark.sparkContext
     before = {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
     n = 120  # long chain -> many rounds
     verts = spark.createDataFrame([(v,) for v in range(1, n + 1)], "v long")
     chain = spark.createDataFrame([(i, i + 1) for i in range(1, n)], "a long, b long")
-    got = connected_components(verts, chain, small_max_edges=0)
+    got = textops.connected_components(verts, chain)
     assert got.filter("lbl <> 1").count() == 0
     after = {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
     new = after - before
