@@ -20,7 +20,7 @@ from __future__ import annotations
 import glob
 import os
 
-from ..table.catalog import Table
+from ..table.catalog import Table, clear_manifest_cache
 from ..table.format import now_ms
 
 
@@ -167,7 +167,7 @@ def gc_orphans(table: Table, grace_ms: int = 24 * 3600 * 1000) -> dict:
             shutil.rmtree(d, ignore_errors=True)
             swept_staging += 1
 
-    table._manifest_cache.clear()
+    clear_manifest_cache()
     return {
         "deleted_files": deleted_files,
         "deleted_manifests": deleted_manifests,

@@ -53,15 +53,13 @@ class Pred:
 
     def may_match(self, f: DataFile) -> bool:
         """Can any row in file ``f`` satisfy this predicate? (stats-based;
-        returns True when stats are missing — pruning must be sound.)"""
-        # identity-partition value beats min/max: it is exact.
-        if self.col in f.partition:
-            v = f.partition[self.col]
-            lo = hi = v
-        else:
-            lo, hi = f.stat(self.col, "min"), f.stat(self.col, "max")
-            if lo is None or hi is None:
-                return True
+        returns True when stats are missing — pruning must be sound.)
+        Identity-partition columns stay inside the data files, so their
+        typed min/max is the partition value itself; the manifest's
+        ``partition`` strings are never compared with a typed value."""
+        lo, hi = f.stat(self.col, "min"), f.stat(self.col, "max")
+        if lo is None or hi is None:
+            return True
         try:
             if self.op == "=":
                 return lo <= self.value <= hi

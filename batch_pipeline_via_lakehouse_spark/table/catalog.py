@@ -16,6 +16,7 @@ reconstruction, and every file carries the one ``Table.arrow_schema``.
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
@@ -34,6 +35,32 @@ from .format import (
     write_manifest,
 )
 from .arrow_io import arrow_rewrite_job
+
+
+# Parsed manifests, shared by every Table of the process so a fresh
+# ``Table.load`` re-reads none. Keyed on the file's stat stamp as well as its
+# path: a manifest rewritten in place under the same name is read again.
+# Callers share the cached DataFiles and must not mutate them. The bound is
+# in manifests: a snapshot listing more than this re-reads them on every
+# fold (LRU over a cyclic scan), so it sits well above what
+# ``rewrite_manifests`` leaves behind.
+_MANIFEST_CACHE_SIZE = 4096
+
+
+@functools.lru_cache(maxsize=_MANIFEST_CACHE_SIZE)
+def _parsed_manifest(metadata_dir: str, name: str, stamp: tuple) -> tuple[DataFile, ...]:
+    return tuple(read_manifest(metadata_dir, name))
+
+
+def manifest_entries(metadata_dir: str, name: str) -> tuple[DataFile, ...]:
+    """The data files one manifest lists, read through the shared cache."""
+    metadata_dir = os.path.abspath(metadata_dir)
+    st = os.stat(os.path.join(metadata_dir, name))
+    return _parsed_manifest(metadata_dir, name, (st.st_mtime_ns, st.st_size, st.st_ino))
+
+
+def clear_manifest_cache() -> None:
+    _parsed_manifest.cache_clear()
 
 
 def _norm_nullability(dt):
@@ -82,7 +109,6 @@ class Table:
         self.schema: StructType = StructType.fromJson(meta["schema"])
         self.partition_cols: list[str] = meta["partition_by"]
         self.table_uuid: str = meta["uuid"]
-        self._manifest_cache: dict[str, list[DataFile]] = {}
 
     @property
     def tracked_cols(self) -> list[str]:
@@ -152,18 +178,13 @@ class Table:
         out.sort(key=lambda s: s.snapshot_id)
         return out
 
-    def _read_manifest_cached(self, name: str) -> list[DataFile]:
-        if name not in self._manifest_cache:
-            self._manifest_cache[name] = read_manifest(self.metadata_dir, name)
-        return self._manifest_cache[name]
-
     def live_files(self, snapshot_id: int | None = None) -> list[DataFile]:
         sid = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
         if sid is None:
             return []
         files: list[DataFile] = []
         for m in self.snapshot(sid).manifests:
-            files.extend(self._read_manifest_cached(m))
+            files.extend(manifest_entries(self.metadata_dir, m))
         return files
 
     # ------------------------------------------------------------- commit
@@ -184,19 +205,15 @@ class Table:
                 # cached reads: a maintenance job issues one commit per
                 # file group, and rescanning every manifest from disk per
                 # commit would make commit cost quadratic in group count
-                entries = self._read_manifest_cached(m)
+                entries = manifest_entries(self.metadata_dir, m)
                 if removed_paths and any(e.path in removed_paths for e in entries):
                     kept = [e for e in entries if e.path not in removed_paths]
                     if kept:
-                        name = write_manifest(self.metadata_dir, kept)
-                        self._manifest_cache[name] = kept
-                        manifests.append(name)
+                        manifests.append(write_manifest(self.metadata_dir, kept))
                 else:
                     manifests.append(m)
         if added:
-            name = write_manifest(self.metadata_dir, added)
-            self._manifest_cache[name] = added
-            manifests.append(name)
+            manifests.append(write_manifest(self.metadata_dir, added))
         return self.publish_snapshot(
             parent,
             operation,

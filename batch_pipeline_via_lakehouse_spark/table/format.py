@@ -29,7 +29,11 @@ in 20 files: a cold full listing costs ~6.5 s at 200k files and ~21-24 s at
 1M; with the manifests cached a scan prune costs 0.5 s / 2.1 s and a commit's
 manifest filter 0.03 s / 0.15 s. About half of a cold ``read_manifest`` is
 JSON-parsing the ``stats`` strings, so the lever at 10^6 files is a typed
-stats encoding, not a second planner.
+stats encoding, not a second planner. Parsed manifests are cached once per
+process (``catalog.manifest_entries``), keyed on the manifest's path and its
+``(st_mtime_ns, st_size, st_ino)`` stamp, so every ``Table`` of the process,
+a fresh ``Table.load`` included, shares them and one rewritten in place is
+read again; GC clears the cache.
 """
 
 from __future__ import annotations

@@ -13,16 +13,36 @@ from batch_pipeline_via_lakehouse_spark.table import Table
 
 
 def test_partition_pruning_is_exact(spark, tmp_path):
-    t = Table.create(str(tmp_path / "t"), TOKEN_SCHEMA, partition_by=["source"])
-    t.append(token_table_df(spark, 1500, seed=5), num_files=4)
-    all_files = t.live_files()
-    pruned = prune_files(all_files, [Pred("source", "=", "wiki")])
-    assert 0 < len(pruned) < len(all_files)
-    assert all(f.partition["source"] == "wiki" for f in pruned)
+    """String and integer identity partitions prune to exactly the matching
+    files, and the pruned scan equals the unpruned filter. The manifest
+    records partition values as strings, so an int predicate must prune on
+    the file's typed min/max, not on that string."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
-    df = scan_with_pruning(spark, t, [Pred("source", "=", "wiki")])
-    expected = t.scan(spark).filter("source = 'wiki'")
-    assert content_checksum(df) == content_checksum(expected)
+    by_source = Table.create(str(tmp_path / "s"), TOKEN_SCHEMA, partition_by=["source"])
+    by_source.append(token_table_df(spark, 1500, seed=5), num_files=4)
+    int_schema = StructType([*TOKEN_SCHEMA.fields, StructField("y", IntegerType(), False)])
+    by_int = Table.create(str(tmp_path / "i"), int_schema, partition_by=["y"])
+    by_int.append(
+        token_table_df(spark, 1500, seed=5).withColumn("y", (F.col("n_tok") % 7).cast("int")),
+        num_files=4,
+    )
+    cases = [
+        (by_source, Pred("source", "=", "wiki"), "source = 'wiki'", {"wiki"}),
+        (by_int, Pred("y", "=", 4), "y = 4", {"4"}),
+        (by_int, Pred("y", "<", 3), "y < 3", {"0", "1", "2"}),
+        (by_int, Pred("y", "between", 5, 9), "y between 5 and 9", {"5", "6"}),
+    ]
+    for t, pred, sql, values in cases:
+        all_files = t.live_files()
+        exact = [f for f in all_files if f.partition[pred.col] in values]
+        assert 0 < len(exact) < len(all_files), pred
+        assert prune_files(all_files, [pred]) == exact, pred
+
+        df = scan_with_pruning(spark, t, [pred])
+        expected = t.scan(spark).filter(sql)
+        assert content_checksum(df) == content_checksum(expected), pred
 
 
 def test_minmax_stat_pruning_sound_and_effective(spark, tmp_path):
@@ -63,3 +83,40 @@ def test_incremental_read_between_snapshots(spark, tmp_path):
     assert d2.count() == 100
     full = read_incremental(spark, t, since_snapshot=None)
     assert full.count() == 600
+
+
+def test_warm_pruned_scan_plan_budget(spark, tmp_path, monkeypatch):
+    """Planning a 2-predicate pruned scan on a fresh ``Table.load`` of a warm
+    table reads no manifest and issues at most 40 py4j commands (with
+    PySpark's per-Column call-site capture on, the same plan issues over
+    100). Three files survive the pruning and each path costs one command."""
+    from py4j.clientserver import ClientServerConnection
+
+    from batch_pipeline_via_lakehouse_spark.table import catalog
+
+    root = str(tmp_path / "t")
+    t = Table.create(root, TOKEN_SCHEMA, partition_by=["source"])
+    for k in range(3):
+        t.append(token_table_df(spark, 400, seed=40 + k), num_files=1)
+    preds = [Pred("source", "=", "wiki"), Pred("n_tok", "between", 100, 2000)]
+    assert len(prune_files(t.live_files(), preds)) == 3
+    scan_with_pruning(spark, Table.load(root), preds)  # warm
+
+    reads, commands = [], []
+    read_manifest = catalog.read_manifest
+    monkeypatch.setattr(
+        catalog, "read_manifest", lambda d, name: reads.append(name) or read_manifest(d, name)
+    )
+    send_command = ClientServerConnection.send_command
+
+    def counting_send_command(self, command):
+        commands.append(command)
+        return send_command(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting_send_command)
+    df = scan_with_pruning(spark, Table.load(root), preds)
+    monkeypatch.undo()
+    assert reads == []
+    assert len(commands) <= 40, len(commands)
+    expected = t.scan(spark).filter("source = 'wiki' and n_tok between 100 and 2000")
+    assert content_checksum(df) == content_checksum(expected)

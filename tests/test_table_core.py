@@ -285,3 +285,52 @@ def test_commit_keeps_zero_row_manifest(spark, tmp_path):
     for m in out:
         kept_paths |= set(pq.read_table(os.path.join(t.metadata_dir, m)).column("path").to_pylist())
     assert removed.isdisjoint(kept_paths)
+
+
+def test_parsed_manifests_are_shared_across_loads(spark, tmp_path, monkeypatch):
+    """A fresh ``Table.load`` re-reads no manifest another Table of the
+    process already parsed; a manifest rewritten in place under the same
+    name is read again; GC leaves none of the manifests it deleted cached."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from batch_pipeline_via_lakehouse_spark.operators.expire import expire_snapshots
+    from batch_pipeline_via_lakehouse_spark.operators.manifest import rewrite_manifests
+    from batch_pipeline_via_lakehouse_spark.table import catalog
+
+    root = str(tmp_path / "t")
+    t = Table.create(root, TOKEN_SCHEMA, partition_by=["source"])
+    for k in range(3):
+        t.append(token_table_df(spark, 200, seed=320 + k), num_files=2)
+    manifests = t.snapshot(t.current_snapshot_id()).manifests
+    assert len(manifests) == 3
+
+    reads = []
+    read_manifest = catalog.read_manifest
+    monkeypatch.setattr(
+        catalog, "read_manifest", lambda d, name: reads.append(name) or read_manifest(d, name)
+    )
+    catalog.clear_manifest_cache()
+    first = Table.load(root).live_files()
+    assert sorted(reads) == sorted(manifests)
+    reads.clear()
+    assert Table.load(root).live_files() == first
+    assert reads == []
+
+    # same name, new content: one entry dropped, so the stamp's size changes
+    path = os.path.join(t.metadata_dir, manifests[0])
+    src = pq.read_table(path)
+    pq.write_table(src.slice(1), path)
+    after = Table.load(root).live_files()
+    assert reads == [manifests[0]]
+    assert len(after) == len(first) - 1
+    assert src.column("path")[0].as_py() not in {f.path for f in after}
+
+    rewrite_manifests(t)
+    rep = expire_snapshots(t, gc=True, gc_grace_ms=0)
+    assert rep["deleted_manifests"] == 3
+    assert catalog._parsed_manifest.cache_info().currsize == 0
+    reads.clear()
+    assert {f.path for f in Table.load(root).live_files()} == {f.path for f in after}
+    assert reads == t.snapshot(t.current_snapshot_id()).manifests

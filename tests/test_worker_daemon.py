@@ -12,6 +12,7 @@ from batch_pipeline_via_lakehouse_spark import worker_daemon
 from batch_pipeline_via_lakehouse_spark.session import get_spark
 
 DAEMON_CONF = "spark.python.daemon.module"
+DEBUG_CONF = "spark.python.sql.dataFrameDebugging.enabled"
 
 
 @pytest.mark.skipif(sys.version_info >= (3, 12), reason="CPython >= 3.12 re-reads lazily")
@@ -93,3 +94,27 @@ def test_daemon_conf_defaults_and_extra_conf_override(monkeypatch):
     assert DAEMON_CONF not in get_spark(master="spark://head:7077")
     kept = get_spark(master="local[2]", extra_conf={DAEMON_CONF: "pyspark.daemon"})
     assert kept[DAEMON_CONF] == "pyspark.daemon"
+    # DataFrame call-site capture is off on every master unless extra_conf says otherwise
+    assert get_spark(master="local[2]")[DEBUG_CONF] == "false"
+    assert get_spark(master="spark://head:7077")[DEBUG_CONF] == "false"
+    assert get_spark(master="local[2]", extra_conf={DEBUG_CONF: "true"})[DEBUG_CONF] == "true"
+
+
+@pytest.mark.parametrize(
+    "name, value",
+    [
+        ("SPARK_GRAFT_NO_ALLOC_TUNING", "true"),
+        ("SPARK_GRAFT_NO_ALLOC_TUNING", "yes"),
+        ("SPARK_GRAFT_CPUS", "four"),
+        ("SPARK_GRAFT_CPUS", "0"),
+        ("SPARK_GRAFT_CPUS", "-2"),
+    ],
+)
+def test_bad_env_values_fail_before_the_jvm_starts(monkeypatch, name, value):
+    started = []
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: started.append(1))
+    monkeypatch.setenv(name, value)
+    with pytest.raises(ValueError, match=name):
+        get_spark()
+    assert not started
+
